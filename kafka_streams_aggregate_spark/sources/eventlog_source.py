@@ -293,7 +293,9 @@ def run_stream_committed(
     ``update`` mode cannot use a Python stream sink at all (the Python
     stream-sink capability layer is append-only). Update-mode results
     carry a ``_batch`` column so the caller can apply the changelog's
-    latest-wins reduction.
+    latest-wins reduction; they are read back in one scan over all the
+    manifest-listed batch directories, so neither the plan nor the file
+    listing grows with the number of batches.
     """
     import glob
     import json
@@ -398,23 +400,24 @@ def run_stream_committed(
             .start()
         )
         _await_drained(q, timeout)
-        parts = []
-        for mf in sorted(
-            glob.glob(f"{out}/manifest/*.json"),
-            key=lambda p: int(os.path.basename(p).split(".")[0]),
-        ):
+        dirs = []
+        for mf in glob.glob(f"{out}/manifest/*.json"):
             with open(mf) as fh:
-                meta = json.load(fh)
-            parts.append(
-                spark.read.schema(schema)
-                .json(meta["dir"])
-                .withColumn("_batch", F.lit(meta["batch"]))
-            )
-        if not parts:
+                dirs.append(json.load(fh)["dir"])
+        if not dirs:
             return spark.createDataFrame([], f"{schema}, _batch int")
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+        # One scan over every committed batch directory; each row's
+        # batch id is the name of the directory its file sits in
+        # (``{out}/data/<batchId>/part-*``).
+        return (
+            spark.read.schema(schema)
+            .json(dirs)
+            .withColumn(
+                "_batch",
+                F.regexp_extract(
+                    F.col("_metadata.file_path"), r"/(\d+)/[^/]+$", 1
+                ).cast("int"),
+            )
+        )
 
     raise ValueError(f"unsupported output mode: {output_mode}")

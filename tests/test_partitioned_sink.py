@@ -172,6 +172,51 @@ def test_run_stream_committed_update_latest_wins(spark, tmp_path):
     assert rows == {0: 45, 1: 46, 2: 47, 3: 48, 4: 49}
 
 
+def test_run_stream_committed_update_reads_back_in_one_scan(spark, tmp_path):
+    """Update-mode read-back is one JSON scan over every committed batch
+    directory, and each row's ``_batch`` is the id of the manifest that
+    lists the directory holding it."""
+    import glob
+    import json
+    import re
+
+    from kafka_streams_aggregate_spark.sources.eventlog_source import (
+        run_stream_committed,
+    )
+
+    src = str(tmp_path / "src")
+    for i in range(4):
+        spark.range(i * 10, i * 10 + 10).selectExpr(
+            "id % 3 AS k", "id AS v"
+        ).coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema("k long, v long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .groupBy("k")
+        .agg({"v": "max"})
+        .withColumnRenamed("max(v)", "v")
+    )
+    work = str(tmp_path / "w")
+    out = run_stream_committed(stream, work, "update", "k bigint, v bigint")
+
+    want = set()
+    for mf in glob.glob(f"{work}/sinkout/manifest/*.json"):
+        with open(mf) as fh:
+            meta = json.load(fh)
+        assert meta["batch"] == int(mf.rsplit("/", 1)[1].split(".")[0])
+        want |= {
+            (r["k"], r["v"], meta["batch"])
+            for r in spark.read.schema("k long, v long").json(meta["dir"]).collect()
+        }
+    got = [(r["k"], r["v"], r["_batch"]) for r in out.collect()]
+    assert len({b for _k, _v, b in got}) >= 3, got
+    assert len(got) == len(want) and set(got) == want
+    plan = formatted_plan(out)
+    assert len(re.findall(r"\(\d+\) Scan json", plan)) == 1, plan
+    assert "Union" not in plan, plan
+
+
 def test_run_stream_committed_empty_stream(spark, tmp_path):
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
         run_stream_committed,

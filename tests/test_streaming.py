@@ -9,13 +9,18 @@ TopologyTestDriver)."""
 
 from __future__ import annotations
 
+import os
 import random
+
+import pytest
 
 from kafka_streams_aggregate_spark.operators.inventory_fold import (
     python_fold_oracle,
 )
 from kafka_streams_aggregate_spark.schemas import INVENTORY_UPDATE_FLAT_SCHEMA
+from kafka_streams_aggregate_spark.streaming import inventory_stream
 from kafka_streams_aggregate_spark.streaming.inventory_stream import (
+    key_bucket,
     streaming_inventory_fold,
 )
 from kafka_streams_aggregate_spark.streaming.pipeline import (
@@ -29,16 +34,29 @@ def _write_round(spark, path, rows, mode):
     df.coalesce(1).write.mode(mode).parquet(path)
 
 
-def _run_stream(spark, src_dir, ckpt_dir, collected=None, sink_fn=None, strict=False):
+def _bucket_mates(spark, n):
+    """``n`` keys that the fold's own bucket expression puts in one
+    bucket, so they share a state row."""
+    keys = spark.createDataFrame([(f"k{i}",) for i in range(200)], "k string")
+    by_bucket = {}
+    for r in keys.select("k", key_bucket("k").alias("b")).collect():
+        by_bucket.setdefault(r["b"], []).append(r["k"])
+    mates = max(by_bucket.values(), key=len)
+    assert len(mates) >= n, by_bucket
+    return sorted(mates, key=lambda k: int(k[1:]))[:n]
+
+
+def _run_stream(spark, src_dir, ckpt_dir, collected=None, sink_fn=None, strict=False,
+                max_files=None):
     """Run the fold to completion over all available files via a
     foreachBatch sink (memory sink cannot recover from a checkpoint).
     Default sink appends emitted changelog rows driver-side to
     ``collected`` as (batch_id, product_code, count); pass ``sink_fn``
     for a custom foreachBatch body."""
-    stream = (
-        spark.readStream.schema(INVENTORY_UPDATE_FLAT_SCHEMA).parquet(src_dir)
-    )
-    folded = streaming_inventory_fold(stream, strict=strict)
+    reader = spark.readStream.schema(INVENTORY_UPDATE_FLAT_SCHEMA)
+    if max_files:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    folded = streaming_inventory_fold(reader.parquet(src_dir), strict=strict)
 
     if sink_fn is None:
 
@@ -128,14 +146,22 @@ def test_stream_multiple_keys_parity_with_batch(spark, tmp_path):
 
 
 def test_update_mode_emits_only_changed_keys(spark, tmp_path):
+    # 'a' and 'b' share a state bucket: touching 'a' rewrites the bucket,
+    # but only 'a' changed, so only 'a' is emitted.
+    a, b = _bucket_mates(spark, 2)
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    _write_round(spark, src, [("a", 1, "INC", 5), ("b", 2, "INC", 3)], "overwrite")
+    _write_round(spark, src, [(a, 1, "INC", 5), (b, 2, "INC", 3)], "overwrite")
     _run_stream(spark, src, ckpt, [])
-    # round 2 touches only key 'a'
-    _write_round(spark, src, [("a", 10, "DEC", 2)], "append")
+    # round 2 touches only key a
+    _write_round(spark, src, [(a, 10, "DEC", 2)], "append")
     c2 = []
     _run_stream(spark, src, ckpt, c2)
-    assert {(k, v) for _b, k, v in c2} == {("a", 3)}  # 5 - 2, key b untouched
+    assert {(k, v) for _b, k, v in c2} == {(a, 3)}  # 5 - 2, key b untouched
+    # b's count survived the rewrite of its bucket
+    _write_round(spark, src, [(b, 20, "INC", 1)], "append")
+    c3 = []
+    _run_stream(spark, src, ckpt, c3)
+    assert {(k, v) for _b, k, v in c3} == {(b, 4)}
 
 
 def test_strict_tombstone_deletes_key_from_state(spark, tmp_path):
@@ -143,30 +169,109 @@ def test_strict_tombstone_deletes_key_from_state(spark, tmp_path):
     action nulls the aggregate -> the key is DELETED from the store and
     a NULL-count changelog marker is emitted. A later valid event
     restarts from the initializer, exactly like Kafka Streams after a
-    tombstone."""
+    tombstone. The three keys share a state bucket: a tombstone removes
+    only its own key's count."""
+    keep, poisoned, reborn = _bucket_mates(spark, 3)
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
     r1 = [
-        ("keep", 1, "INC", 7),
-        ("poisoned", 2, "INC", 9),
-        ("poisoned", 3, "DESTROY", 1),  # unknown action -> tombstone
-        ("reborn", 4, "INC", 5),
-        ("reborn", 5, "DESTROY", 1),
-        ("reborn", 6, "INC", 2),  # restarts from initializer 0
+        (keep, 1, "INC", 7),
+        (poisoned, 2, "INC", 9),
+        (poisoned, 3, "DESTROY", 1),  # unknown action -> tombstone
+        (reborn, 4, "INC", 5),
+        (reborn, 5, "DESTROY", 1),
+        (reborn, 6, "INC", 2),  # restarts from initializer 0
     ]
     _write_round(spark, src, r1, "overwrite")
     c1 = []
     _run_stream(spark, src, ckpt, c1, strict=True)
     latest = _latest_counts(c1)
-    assert latest["keep"] == 7
-    assert latest["poisoned"] is None  # deletion marker emitted
-    assert latest["reborn"] == 2
+    assert latest[keep] == 7
+    assert latest[poisoned] is None  # deletion marker emitted
+    assert latest[reborn] == 2
 
     # Round 2: the poisoned key's state is GONE (not just masked) —
-    # a new INC folds from 0, not from the pre-poison 9.
-    _write_round(spark, src, [("poisoned", 10, "INC", 4)], "append")
+    # a new INC folds from 0, not from the pre-poison 9 — while its
+    # bucket-mate keeps its count.
+    _write_round(
+        spark, src, [(poisoned, 10, "INC", 4), (keep, 11, "INC", 1)], "append"
+    )
     c2 = []
     _run_stream(spark, src, ckpt, c2, strict=True)
-    assert _latest_counts(c2) == {"poisoned": 4}
+    assert _latest_counts(c2) == {poisoned: 4, keep: 8}
+
+    # Round 3: tombstoning every key of the bucket empties it.
+    _write_round(
+        spark,
+        src,
+        [(k, 20 + i, "DESTROY", 1) for i, k in enumerate((keep, poisoned, reborn))],
+        "append",
+    )
+    c3 = []
+    _run_stream(spark, src, ckpt, c3, strict=True)
+    assert _latest_counts(c3) == {keep: None, poisoned: None, reborn: None}
+    state = spark.read.format("statestore").load(ckpt)
+    assert state.count() == 0
+
+
+@pytest.mark.parametrize("strict", [False, True], ids=["lenient", "strict"])
+def test_many_keys_per_bucket_parity_across_batches(spark, tmp_path, strict):
+    """Hundreds of keys over the fold's 64 state buckets, so every
+    bucket holds several keys, folded over several micro-batches (one
+    file each) with INC/DEC/REP, null deltas and unknown actions: the
+    final state equals ``python_fold_oracle``."""
+    import glob
+    import shutil
+    import time
+
+    rng = random.Random(29)
+    n_keys, n_files, per_file = 320, 3, 800
+    actions = ["INC", "DEC", "REP", "INC", "DEC", "ADJ"]
+    rows = []
+    for seq in range(n_files * per_file):
+        delta = None if rng.random() < 0.03 else rng.randint(1, 50)
+        rows.append((f"key{rng.randrange(n_keys)}", seq, rng.choice(actions), delta))
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    now = time.time()
+    for i in range(n_files):
+        stage = str(tmp_path / f"stage{i}")
+        _write_round(spark, stage, rows[i * per_file:(i + 1) * per_file], "overwrite")
+        [part] = glob.glob(f"{stage}/part-*.parquet")
+        shutil.move(part, f"{src}/f{i}.parquet")
+        os.utime(f"{src}/f{i}.parquet", (now + 10 * i, now + 10 * i))
+
+    c = []
+    _run_stream(spark, src, str(tmp_path / "ckpt"), c, strict=strict, max_files=1)
+    assert len({bid for bid, _k, _v in c}) >= n_files, "expected one batch per file"
+    state = {k: v for k, v in _latest_counts(c).items() if v is not None}
+    oracle = python_fold_oracle(rows, strict=strict)
+    assert state == oracle
+    assert len(oracle) > 250
+
+
+def test_bucket_count_change_is_refused(spark, tmp_path, monkeypatch):
+    """A checkpoint is tied to the bucket count it was written under:
+    restarting it with another ``N_BUCKETS`` would fold moved keys from
+    0 and strand their old counts, so the state function refuses it.
+    (Spark cannot catch this itself: the state key is an int either
+    way.)"""
+    keys = spark.createDataFrame([(f"k{i}",) for i in range(50)], "k string")
+    # A key in bucket b < 16 is in bucket b under 16 buckets too, so the
+    # second run reads the state row the first one wrote.
+    key = next(
+        r["k"] for r in keys.select("k", key_bucket("k").alias("b")).collect()
+        if r["b"] < 16
+    )
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    _write_round(spark, src, [(key, 1, "INC", 5)], "overwrite")
+    c1 = []
+    _run_stream(spark, src, ckpt, c1)
+    assert _latest_counts(c1) == {key: 5}
+
+    monkeypatch.setattr(inventory_stream, "N_BUCKETS", 16)
+    _write_round(spark, src, [(key, 2, "INC", 1)], "append")
+    with pytest.raises(Exception, match="written under 64 key buckets"):
+        _run_stream(spark, src, ckpt, [])
 
 
 def test_strict_tombstone_batch_stream_parity(spark, tmp_path):

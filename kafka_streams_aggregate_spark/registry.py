@@ -148,7 +148,8 @@ def load_all() -> dict[str, QueryDef]:
 # — the queue is restocked with Lepage, tests/test_r17_stage3.py);
 # wave 12 graduates streaming telemetry (q_stream_telemetry — the
 # progress feed as verified data, the LAST non-environment-gated
-# engine row; only transformWithState remains, protoshim-gated).
+# engine row; per-bucket applyInPandasWithState is the single stateful
+# path).
 # Wave 13 graduates the staged r17 batch-3 operator (q_lepage);
 # wave 14 adds the fresh six (q_diebold_mariano,
 # q_variance_homogeneity, q_ewma_chart, q_brier_decomposition,

@@ -57,14 +57,6 @@ def get_spark(
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
 
-    # transformWithStateInPandas speaks a protobuf protocol between the
-    # Python worker and the JVM state server; where the protobuf wheel
-    # is absent the vendored pure-Python shim stands in. Must run
-    # before the JVM boots: workers inherit PYTHONPATH through it.
-    from kafka_streams_aggregate_spark.protoshim import ensure_protobuf
-
-    ensure_protobuf()
-
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -258,6 +258,50 @@ def _await_drained(q, timeout: int) -> None:
         )
 
 
+# Microsecond timestamps in committed JSON: the writer's default format
+# truncates to milliseconds.
+TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
+
+
+def _read_committed(spark, out: str, schema: str, with_batch: bool):
+    """One JSON scan over every batch directory a ``{"batch", "dir"}``
+    manifest under ``{out}/manifest`` lists. ``FAILFAST``: a committed
+    file that does not parse under ``schema`` raises instead of reading
+    back as NULLs. ``with_batch`` adds ``_batch``, the id of the batch
+    whose directory (``{out}/data/<batchId>/part-*``) holds the row."""
+    import glob
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    dirs = []
+    for mf in sorted(
+        glob.glob(f"{out}/manifest/*.json"),
+        key=lambda p: int(os.path.basename(p).split(".")[0]),
+    ):
+        with open(mf) as fh:
+            dirs.append(json.load(fh)["dir"])
+    if not dirs:
+        return spark.createDataFrame(
+            [], f"{schema}, _batch int" if with_batch else schema
+        )
+    df = (
+        spark.read.schema(schema)
+        .option("timestampFormat", TS_FMT)
+        .option("mode", "FAILFAST")
+        .json(dirs)
+    )
+    if with_batch:
+        df = df.withColumn(
+            "_batch",
+            F.regexp_extract(
+                F.col("_metadata.file_path"), r"/(\d+)/[^/]+$", 1
+            ).cast("int"),
+        )
+    return df
+
+
 def run_stream_committed(
     stream_df,
     work: str,
@@ -277,7 +321,7 @@ def run_stream_committed(
     ``batch_df.write.json`` per micro-batch with an atomic per-batch
     manifest alongside (idempotent by batchId, Spark's own
     FileCommitProtocol supplying task-level atomicity) — the same
-    mechanism ``update`` mode has always used. r17-opt (guide §4):
+    sink ``update`` mode uses. r17-opt (guide §4):
     this was previously the ``eventlogsink`` Python DataSource for all
     ~40 streaming queries, which put a per-task Python writer round
     trip in EVERY micro-batch; a fresh-JVM sink-isolation probe at
@@ -293,9 +337,9 @@ def run_stream_committed(
     ``update`` mode cannot use a Python stream sink at all (the Python
     stream-sink capability layer is append-only). Update-mode results
     carry a ``_batch`` column so the caller can apply the changelog's
-    latest-wins reduction; they are read back in one scan over all the
-    manifest-listed batch directories, so neither the plan nor the file
-    listing grows with the number of batches.
+    latest-wins reduction. Both modes read back in one scan over all the
+    manifest-listed batch directories (``_read_committed``), so neither
+    the plan nor the file listing grows with the number of batches.
     """
     import glob
     import json
@@ -304,51 +348,13 @@ def run_stream_committed(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StringType, StructField, StructType
 
+    if output_mode not in ("append", "update"):
+        raise ValueError(f"unsupported output mode: {output_mode}")
     spark = stream_df.sparkSession
     out = f"{work}/sinkout"
     ckpt = f"{work}/sinkckpt"
-    TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
-    if output_mode == "append" and append_via == "foreachbatch":
-
-        def _sink(batch_df, bid):
-            # Distributed per-batch write + atomic manifest publish; a
-            # retried batch overwrites its own directory and manifest
-            # (idempotent by batchId), so readers see each batch once.
-            data_dir = f"{out}/data/{bid}"
-            batch_df.write.mode("overwrite").option(
-                "timestampFormat", TS_FMT
-            ).json(data_dir)
-            os.makedirs(f"{out}/manifest", exist_ok=True)
-            tmp = f"{out}/manifest/.{bid}.json.tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"batch": bid, "dir": data_dir}, fh)
-            os.replace(tmp, f"{out}/manifest/{bid}.json")
-
-        q = (
-            stream_df.writeStream.foreachBatch(_sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q, timeout)
-        dirs = []
-        for mf in sorted(
-            glob.glob(f"{out}/manifest/*.json"),
-            key=lambda p: int(os.path.basename(p).split(".")[0]),
-        ):
-            with open(mf) as fh:
-                dirs.append(json.load(fh)["dir"])
-        if not dirs:
-            return spark.createDataFrame([], schema)
-        return (
-            spark.read.schema(schema)
-            .option("timestampFormat", TS_FMT)
-            .json(dirs)
-        )
-
-    if output_mode == "append":
+    if output_mode == "append" and append_via != "foreachbatch":
         register_eventlog_sink(spark)
         q = (
             stream_df.writeStream.format("eventlogsink")
@@ -378,46 +384,26 @@ def run_stream_committed(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target]
         )
 
-    if output_mode == "update":
-
-        def _sink(batch_df, bid):
-            # Distributed per-batch write + atomic manifest publish; a
-            # retried batch overwrites its own directory and manifest
-            # (idempotent by batchId), so readers see each batch once.
-            data_dir = f"{out}/data/{bid}"
-            batch_df.write.mode("overwrite").json(data_dir)
-            os.makedirs(f"{out}/manifest", exist_ok=True)
-            tmp = f"{out}/manifest/.{bid}.json.tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"batch": bid, "dir": data_dir}, fh)
-            os.replace(tmp, f"{out}/manifest/{bid}.json")
-
-        q = (
-            stream_df.writeStream.foreachBatch(_sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def _sink(batch_df, bid):
+        # Distributed per-batch write + atomic manifest publish; a
+        # retried batch overwrites its own directory and manifest
+        # (idempotent by batchId), so readers see each batch once.
+        data_dir = f"{out}/data/{bid}"
+        batch_df.write.mode("overwrite").option("timestampFormat", TS_FMT).json(
+            data_dir
         )
-        _await_drained(q, timeout)
-        dirs = []
-        for mf in glob.glob(f"{out}/manifest/*.json"):
-            with open(mf) as fh:
-                dirs.append(json.load(fh)["dir"])
-        if not dirs:
-            return spark.createDataFrame([], f"{schema}, _batch int")
-        # One scan over every committed batch directory; each row's
-        # batch id is the name of the directory its file sits in
-        # (``{out}/data/<batchId>/part-*``).
-        return (
-            spark.read.schema(schema)
-            .json(dirs)
-            .withColumn(
-                "_batch",
-                F.regexp_extract(
-                    F.col("_metadata.file_path"), r"/(\d+)/[^/]+$", 1
-                ).cast("int"),
-            )
-        )
+        os.makedirs(f"{out}/manifest", exist_ok=True)
+        tmp = f"{out}/manifest/.{bid}.json.tmp"
+        with open(tmp, "w") as fh:
+            json.dump({"batch": bid, "dir": data_dir}, fh)
+        os.replace(tmp, f"{out}/manifest/{bid}.json")
 
-    raise ValueError(f"unsupported output mode: {output_mode}")
+    q = (
+        stream_df.writeStream.foreachBatch(_sink)
+        .outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await_drained(q, timeout)
+    return _read_committed(spark, out, schema, with_batch=output_mode == "update")

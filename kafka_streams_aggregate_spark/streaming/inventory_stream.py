@@ -18,6 +18,9 @@ Spark mapping (SURVEY.md §2.1/§3.2):
   - null-value records dropped before the fold (library rule the
     reference depends on).
 
+``streaming_inventory_fold`` is the single stateful path: per-bucket
+``applyInPandasWithState``, no second state API beside it.
+
 Scale notes: the stateful operator groups by a fixed hash bucket of the
 key, ``pmod(xxhash64(product_code), N_BUCKETS)``, not by the key. The
 Python state function is called once per bucket a micro-batch touches
@@ -54,92 +57,6 @@ STATE_SCHEMA = "keys array<string>, counts array<bigint>, n_buckets int"
 
 # Hash buckets the stateful fold groups keys into (see "Scale notes").
 N_BUCKETS = 64
-
-
-def _tws_available() -> bool:
-    """transformWithStateInPandas needs a google.protobuf runtime for
-    its worker<->JVM state protocol. Where the protobuf wheel is absent
-    the vendored pure-Python shim (``protoshim.ensure_protobuf``)
-    satisfies it — but only if the SparkSession was built by our
-    ``session.get_spark`` (the shim must be on PYTHONPATH *before* the
-    JVM boots so spawned Python workers inherit it). Under a foreign
-    vanilla session with no protobuf wheel, the import below still
-    succeeds driver-side but workers would fail — which is why this
-    variant stays a tested alternate path and the registered streaming
-    queries use ``applyInPandasWithState``."""
-    from kafka_streams_aggregate_spark.protoshim import ensure_protobuf
-
-    ensure_protobuf()
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def streaming_inventory_fold_tws(updates: DataFrame) -> DataFrame:
-    """Spark >= 4.0 variant of the fold on the transformWithState API
-    (StatefulProcessor + typed ValueState). Functionally identical to
-    ``streaming_inventory_fold``; requires the RocksDB state store
-    provider (``spark.sql.streaming.stateStore.providerClass``) and the
-    protobuf runtime (see ``_tws_available``).
-
-    The newer API buys: typed state handles (ValueState/ListState/
-    MapState), per-key timers, and state schema evolution — the
-    features a long-lived 100 TB-scale deployment eventually needs.
-    """
-    if not _tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf, which is "
-            "not available in this environment; use "
-            "streaming_inventory_fold (applyInPandasWithState) instead"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    # Self-contained class (pickled by value) — same rule as the
-    # applyInPandasWithState closure below.
-    class InventoryFoldProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._count = handle.getValueState("count", "count bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            count = self._count.get()[0] if self._count.exists() else 0
-            chunks = list(rows)
-            batch = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-            batch = batch.sort_values("seq")
-            for action, delta in zip(batch["action"], batch["delta"]):
-                if pd.isna(delta) or action is None:
-                    continue
-                d = int(delta)
-                if action == "INC":
-                    count += d
-                elif action == "DEC":
-                    count -= d
-                elif action == "REP":
-                    count = d
-            self._count.update((count,))
-            yield pd.DataFrame({"product_code": [key[0]], "count": [count]})
-
-        def close(self) -> None:
-            pass
-
-    valid = updates.filter(
-        F.col("delta").isNotNull()
-        & F.col("action").isNotNull()
-        & F.col("action").isin("INC", "DEC", "REP")
-    )
-    return valid.groupBy("product_code").transformWithStateInPandas(
-        InventoryFoldProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
 
 
 def key_bucket(col: str = "product_code"):

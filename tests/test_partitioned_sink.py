@@ -150,6 +150,55 @@ def test_run_stream_committed_append_timestamp_micros(spark, tmp_path):
     assert row["ts"].microsecond == 123456
 
 
+def test_run_stream_committed_update_timestamp_micros(spark, tmp_path):
+    # Update mode shares the append path's sink and read-back, so a
+    # timestamp's microseconds survive the JSON round trip there too.
+    from kafka_streams_aggregate_spark.sources.eventlog_source import (
+        run_stream_committed,
+    )
+
+    src = str(tmp_path / "src")
+    spark.sql(
+        "SELECT timestamp_micros(1705363200123456 + id) AS ts, id % 2 AS k "
+        "FROM range(4)"
+    ).write.parquet(src)
+    stream = (
+        spark.readStream.schema("ts timestamp, k bigint")
+        .parquet(src)
+        .groupBy("k")
+        .agg({"ts": "max"})
+        .withColumnRenamed("max(ts)", "ts")
+    )
+    out = run_stream_committed(
+        stream, str(tmp_path / "w"), "update", "k bigint, ts timestamp"
+    )
+    got = {r["k"]: r["ts"].microsecond for r in out.collect()}
+    assert got == {0: 123458, 1: 123459}
+
+
+def test_committed_read_back_fails_fast_on_malformed_file(spark, tmp_path):
+    """A manifest-listed file that does not parse raises on read-back
+    instead of reading back as a row of NULLs."""
+    import json
+
+    from kafka_streams_aggregate_spark.sources.eventlog_source import (
+        _read_committed,
+    )
+
+    out = tmp_path / "sinkout"
+    data_dir = out / "data" / "0"
+    data_dir.mkdir(parents=True)
+    (data_dir / "part-00000.json").write_text('{"k":1,"v":2}\n{"k":3,"v"\n')
+    (out / "manifest").mkdir()
+    (out / "manifest" / "0.json").write_text(
+        json.dumps({"batch": 0, "dir": str(data_dir)})
+    )
+    for with_batch in (False, True):
+        df = _read_committed(spark, str(out), "k bigint, v bigint", with_batch)
+        with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING"):
+            df.collect()
+
+
 def test_run_stream_committed_update_latest_wins(spark, tmp_path):
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
         run_stream_committed,

@@ -138,76 +138,27 @@ def test_streaming_fold_on_rocksdb_state_store(spark, tmp_path):
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
-def test_transform_with_state_fold_matches_oracle(spark, tmp_path):
-    """The Spark-4 transformWithState variant of the fold (typed
-    ValueState on RocksDB) produces the same results as the
-    applyInPandasWithState path and the Python oracle. Skipped where
-    the protobuf runtime the API depends on is absent."""
-    import random
-
-    import pytest as _pytest
-
-    from kafka_streams_aggregate_spark.operators.inventory_fold import (
-        python_fold_oracle,
-    )
-    from kafka_streams_aggregate_spark.schemas import INVENTORY_UPDATE_FLAT_SCHEMA
-    from kafka_streams_aggregate_spark.streaming.inventory_stream import (
-        _tws_available,
-        streaming_inventory_fold_tws,
-    )
-
-    if not _tws_available():
-        with _pytest.raises(NotImplementedError, match="protobuf"):
-            streaming_inventory_fold_tws(
-                spark.readStream.schema(INVENTORY_UPDATE_FLAT_SCHEMA).parquet(
-                    str(tmp_path)
-                )
-            )
-        _pytest.skip("google.protobuf absent: transformWithState gated off")
-
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        rng = random.Random(31)
-        rows = [
-            (f"key{k}", s, rng.choice(["INC", "DEC", "REP"]), rng.randint(1, 10))
-            for k in range(4)
-            for s in range(6)
-        ]
-        df = spark.createDataFrame(rows, schema=INVENTORY_UPDATE_FLAT_SCHEMA)
-        src = str(tmp_path / "src")
-        df.coalesce(1).write.parquet(src)
-        stream = spark.readStream.schema(INVENTORY_UPDATE_FLAT_SCHEMA).parquet(src)
-        collected = []
-
-        def _sink(batch_df, _bid):
-            collected.extend(
-                (r["product_code"], r["count"]) for r in batch_df.collect()
-            )
-
-        q = (
-            streaming_inventory_fold_tws(stream)
-            .writeStream.foreachBatch(_sink)
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert dict(collected) == python_fold_oracle(rows)
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_aqe_and_skew_join_enabled(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
+
+
+def test_session_leaves_import_path_alone(spark):
+    """Building the session adds no directory under the package to this
+    process's ``sys.path`` or to the ``PYTHONPATH`` its workers inherit."""
+    import os
+    import sys
+
+    import kafka_streams_aggregate_spark as pkg
+
+    pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
+    entries = sys.path + os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    under_pkg = [
+        p
+        for p in entries
+        if p and (os.path.abspath(p) + os.sep).startswith(pkg_dir + os.sep)
+    ]
+    assert under_pkg == []
 
 
 def test_streaming_cep_match_straddles_batch_boundary(spark, tmp_path):

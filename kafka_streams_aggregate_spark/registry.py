@@ -8,7 +8,8 @@ Every operator the engine claims is registered here as a pair:
 
 ``__spark_entry__.py`` exposes this registry to the driver. Column
 names are aliased identically on both sides (the driver's compare sorts
-columns by name before hashing).
+columns by name before hashing). Queries are listed in registration
+order, so the reference fold queries come first (``q_agg_inventory``).
 """
 
 from __future__ import annotations
@@ -70,260 +71,3 @@ def load_all() -> dict[str, QueryDef]:
 
     return QUERIES
 
-
-# The external driver's correctness snapshot records at most ~50 queries
-# per round (round 1 recorded exactly the first 50 of 65, in iteration
-# order). With more declared queries than snapshot slots, iteration order
-# decides which get driver-verified each round, so ``ordered()`` front-
-# loads: (tier 1) queries that have never had a green driver correctness
-# row in ANY prior round's snapshot — computed dynamically from the
-# CORRECTNESS_r*.json files the driver leaves in the repo root, so
-# verification rotates automatically as rounds land; (tier 2) queries
-# whose implementation or oracle changed this round (manual list);
-# (tier 3) the core reference-parity set (re-verified every round);
-# (tier 4) everything else in registration order — already green in a
-# prior round's snapshot and unchanged since.
-# Round 14: tier 1 (never verified) opens with the staged batch-3
-# graduations q_cronbach_alpha + q_lin_ccc and the two engine-row
-# graduations q_rocksdb_changelog_restore + q_cbo_stats_selectivity
-# (queries/round14.py) and grows with this round's fresh
-# registrations; the rows-only rotation re-admits q_dedup_simhash
-# automatically (14 % 4 = 2 in the sorted rows-only list). Tier 2 carries the queries whose
-# implementation or oracle changed this round per the r13 advice
-# fixes: q_page_trend (fully-dropped groups now emit NULL-stat rows
-# — dropped drives a left join, both engines), q_chunk_mixing
-# (offsets window rebuilt over the renamed columns; registered
-# behavior unchanged), q_corpus_prep_pipeline (try_cast fallback
-# weight for non-'srcN' sources; registered behavior unchanged).
-# The fresh queue landed same-round (18 more tier-1 names in
-# queries/round14.py: 6 nonparametric/association stats, RSI +
-# drawdown, 4 LLM-data quality/mixture, int8 Lloyd step, Neyman +
-# Horvitz-Thompson, Katz + rich-club, EXECUTE IMMEDIATE), plus a
-# second same-round batch of 5 (near-dup cluster profile,
-# Ansari-Bradley, Ljung-Box, and the AQE-skew-join + bucket-pruning
-# engine graduations), the watermark-late-drop engine graduation
-# (q_watermark_late_drop), and the same-round graduation of the
-# late-staged r15 pair (q_durbin_watson, q_bartels_rvn — replaced in
-# the staging queue by seasonal Sen slope + WAPE/bias,
-# tests/test_r15_stage2.py).
-# Round 15: tier 1 opens with the staged batch-2 graduations
-# q_seasonal_sen_slope + q_forecast_wape and the fresh stats batch
-# (q_turning_points, q_cox_stuart, q_kendall_w, q_icc_oneway,
-# q_theil_u2, q_tracking_signal, q_dixon_q, q_ordinal_patterns,
-# q_grubbs_outlier, q_bowker_symmetry — queries/round15.py) and
-# grows with this round's remaining registrations; the rows-only
-# rotation re-admits q_sim_cosine_topk_gemm (15 % 4 = 3 in the
-# sorted rows-only list). Tier 2 = the three r14-advice oracle-text
-# changes (values unchanged on real data; SQL changed).
-# A second batch adds the LLM-data six (q_dedup_canonical_packing,
-# q_url_dedup, q_quality_mixture_reweight, q_cross_source_dups,
-# q_vocab_coverage, q_ngram_novelty).
-# A third batch graduates the last two graduatable engine rows
-# (q_listagg_ordered, q_sink_exactly_once); a fourth adds
-# q_spatial_autocorr (Moran's I + Geary's C); wave 5 graduates the
-# staged r16 pair same-round (q_fligner_policello, q_cucconi — the
-# r14 precedent; replaced in the staging queue by Lepage + quantile
-# crossing or whatever round 16 opens with) and adds
-# q_seasonal_mann_kendall, q_pacf2, q_process_capability.
-# Wave 6 adds the eval-set preparation capstone
-# (q_eval_prep_pipeline) and the repetition-discounted mixture
-# (q_dup_weighted_mixture).
-# Round 16: tier 1 opens with the staged batch-2 graduations
-# q_kuiper + q_wasserstein_drift (queries/round16.py) and grows
-# with this round's fresh registrations; the rows-only rotation
-# re-admits q_approx_aggregates (16 % 4 = 0 in the sorted rows-only
-# list; its green _bounds twin remains the certificate). Tier 2 =
-# the two r15-advice oracle-text changes (values unchanged on real
-# data — the zero-rate guard and the utm_/schemeless URL fixes only
-# bite on degenerate inputs absent from the synthesized URLs — but
-# the SQL changed, so they re-verify).
-# Wave 7 graduates the staged r17 pair same-round (q_mann_whitney,
-# q_brunner_munzel — the r14/r15 precedent; the staging queue is
-# restocked, SURVEY §15). Wave 8 adds the corpus-comparison text pair
-# (q_vocab_overlap, q_token_burstiness); wave 9 the RxC chi-square /
-# Cramér's V² and the decile-lift targeting report
-# (q_chi2_contingency, q_decile_lift); wave 10 the quantile-forecast
-# eval pair (q_pinball_loss, q_smape_eval); wave 11 graduates the
-# staged r17 batch-2 pair same-round (q_mood_scale, q_conover_scale
-# — the queue is restocked with Lepage, tests/test_r17_stage3.py);
-# wave 12 graduates streaming telemetry (q_stream_telemetry — the
-# progress feed as verified data, the LAST non-environment-gated
-# engine row; per-bucket applyInPandasWithState is the single stateful
-# path).
-# Wave 13 graduates the staged r17 batch-3 operator (q_lepage);
-# wave 14 adds the fresh six (q_diebold_mariano,
-# q_variance_homogeneity, q_ewma_chart, q_brier_decomposition,
-# q_mattr, q_pair_overlap_density — tests/test_r16_wave14.py);
-# wave 15 graduates three more staged r17 operators (q_snht,
-# q_chunk_dup_profile, q_winnowing — Buishand stays staged).
-# Window: 41 tier-1 (8 graduations + 3 LLM directions + 21 stats/TS
-# + 2 spatial + 2 engine graduations + 2 audits + 1 events + 3 text
-# + 2 ml-eval + 2 llm-dedup) + 1 rows-only + 3 tier-2 (the two
-# advice fixes plus the q_aqe_skew_join re-size) + 5 pins
-# = 50 <= 50 (SURVEY §15) — the window is FULL; r17 must not add
-# tier-1 rows until the r16 snapshot lands.
-_TIER_2_CHANGED_THIS_ROUND = (
-    # r16: the r15-advice fixes touched these operators AND their
-    # oracle texts.
-    "q_horvitz_thompson",
-    "q_url_dedup",
-    # r16 full-registry sweep catch: the 20k x 5k / 2KB skew synthetic
-    # stopped crossing AQE's detection bar (flag false, cardinality
-    # still exact) — re-sized to 200k x 50k / 16KB per the r14 note's
-    # measured alternative; oracle cardinality changed, re-verify.
-    "q_aqe_skew_join",
-)
-_TIER_3_CORE_PARITY = (
-    "q_agg_inventory",
-    "q_upsert_latest",
-    "q_agg_inventory_stream",
-    "q_tumbling_window_stream",
-    "q_agg_inventory_nullsafe",
-)
-
-
-def _round_number(path: str) -> int:
-    """Parse N from .../CORRECTNESS_rNN.json (lexicographic sort would
-    order r100 before r11)."""
-    import os
-    import re
-
-    m = re.search(r"_r(\d+)\.json$", os.path.basename(path))
-    return int(m.group(1)) if m else -1
-
-
-def verified_in_prior_round() -> set[str]:
-    """Query names whose LATEST driver-correctness row is green.
-
-    The most recent snapshot's verdict wins per query, so a regression
-    (green in r01, red in r03) automatically re-enters the
-    never-verified tier. A row is green when the driver recorded no
-    error and every recorded match flag is true — or, for oracle-less
-    queries, when ``err == 'no_oracle'`` with a non-null spark row
-    count: the rows-only check the driver runs for them passed, and
-    treating that as unverified would pin them at the front of
-    ``ordered()`` forever, wasting snapshot slots every round.
-
-    Rows-only verdicts are weaker, so they don't stay green forever:
-    each round, one oracle-less query (rotating deterministically by
-    round count) is dropped from the green set so it re-enters the
-    snapshot window and its rows-only check re-runs.
-    """
-    import glob
-    import json
-    import os
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    paths = sorted(
-        glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json")), key=_round_number
-    )
-    latest: dict[str, dict] = {}
-    for path in paths:
-        try:
-            snapshot = json.loads(open(path).read())
-        except (OSError, ValueError):
-            continue
-        for name, row in snapshot.items():
-            if isinstance(row, dict):
-                latest[name] = row
-    green: set[str] = set()
-    rows_only: list[str] = []
-    for name, row in latest.items():
-        if row.get("err") == "no_oracle":
-            if row.get("spark_rows") is not None:
-                green.add(name)
-                rows_only.append(name)
-            continue
-        if row.get("err") is not None:
-            continue
-        checks = [
-            row[k]
-            for k in ("rows_match", "schema_match", "hash_match")
-            if k in row and row[k] is not None
-        ]
-        if all(checks):
-            green.add(name)
-    if rows_only:
-        rows_only.sort()
-        next_round = (max((_round_number(p) for p in paths), default=0)) + 1
-        green.discard(rows_only[next_round % len(rows_only)])
-    return green
-
-
-def ordered() -> dict[str, QueryDef]:
-    """All queries, iteration order = driver-verification priority."""
-    all_q = load_all()
-    prior_green = verified_in_prior_round()
-    tiers = {
-        name: t + 1
-        for t, names in enumerate((_TIER_2_CHANGED_THIS_ROUND, _TIER_3_CORE_PARITY))
-        for name in names
-    }
-    missing = set(tiers) - set(all_q)
-    if missing:
-        raise ValueError(f"priority tiers name unknown queries: {sorted(missing)}")
-    reg_pos = {name: i for i, name in enumerate(all_q)}
-
-    def key(kv):
-        name = kv[0]
-        if name not in prior_green:
-            return (0, reg_pos[name])  # tier 1: never verified
-        return (tiers.get(name, 9), reg_pos[name])
-
-    return dict(sorted(all_q.items(), key=key))
-
-
-def _rotation(names: list[str], modulus: int) -> list[str]:
-    """Shared rotation core for the structural and oracle-parity
-    nets: every query whose latest driver verdict is not green (new
-    or changed this round — the full local gate at landing, per
-    CLAUDE.md's "new queries must pass" rule) and every tier-2/
-    tier-3 priority name always run; the remaining prior-green names
-    rotate a deterministic 1/modulus slice keyed on the upcoming
-    round number (computed from the CORRECTNESS_r*.json files the
-    driver leaves), so no test run depends on wall clock and an
-    unchanged query re-audits at least every ``modulus`` rounds."""
-    import glob
-    import os
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    paths = glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json"))
-    upcoming = max((_round_number(p) for p in paths), default=0) + 1
-    green = verified_in_prior_round()
-    always = set(_TIER_2_CHANGED_THIS_ROUND) | set(_TIER_3_CORE_PARITY)
-    keep = [n for n in names if n not in green or n in always]
-    rest = sorted(n for n in names if n in green and n not in always)
-    keep += [n for i, n in enumerate(rest) if i % modulus == upcoming % modulus]
-    return sorted(keep)
-
-
-def suite_rotation(names: list[str]) -> list[str]:
-    """Deterministic suite-time rotation for the STRUCTURAL per-query
-    test families (partitioning-independence, plan lint, vacuous-
-    oracle audit). The oracle-parity net rotates separately — see
-    ``oracle_rotation`` (quarters, since round 13).
-
-    SIXTHS (round 16, the r15 verdict's suite-time item — one more
-    notch with the landing gate intact): an unchanged query's
-    structural properties re-audit at least every 6 rounds (round 11
-    thirds -> quarters at 341 queries; round 12 quarters -> fifths at
-    379; round 16 fifths -> sixths at 489 — the rotated slice is a
-    minority term, see the CLAUDE.md round-16 suite-time note for the
-    measured floor arithmetic)."""
-    return _rotation(names, 6)
-
-
-def oracle_rotation(names: list[str]) -> list[str]:
-    """Rotation for the ORACLE-PARITY net (round 13, per the r12
-    verdict's suite-time item): at 403 registered queries the full
-    suite measured 19:46 — past the 15-min guard — and the
-    never-rotated parity net is the term that grows linearly with
-    the registry. SIXTHS since round 16 (fifths r15: the steady
-    state still measured 21:46 — see the CLAUDE.md round-16
-    suite-time note for why rotation alone cannot reach 15:00 and
-    what the revised guard is), with never-green names (new or
-    changed this round) and the tier-2/tier-3 priority names always
-    on, so the landing gate keeps full strength. The driver's own
-    sf0.01 check still covers the snapshot window every round
-    regardless."""
-    return _rotation(names, 6)

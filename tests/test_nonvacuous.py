@@ -17,6 +17,9 @@ This suite makes that audit standing practice:
 No whitelist is currently needed — a query whose correct result is
 documented-empty at sf0.01 would be added to ``DOCUMENTED_EMPTY`` with
 a comment saying why.
+
+Every registered query is a case; tier-1 runs the cases listed in
+``per_query_net.txt`` (see ``conftest.py``).
 """
 
 from __future__ import annotations
@@ -24,21 +27,15 @@ from __future__ import annotations
 import pytest
 
 from kafka_streams_aggregate_spark.oracle import duck_con_for
-from kafka_streams_aggregate_spark.registry import load_all, suite_rotation
+from kafka_streams_aggregate_spark.registry import load_all
 
 SF = "/root/testdata/sf0.01"
 
 DOCUMENTED_EMPTY: dict[str, str] = {}
 
 _ALL = load_all()
-# Suite-time rotation (round 10): never-green queries always audited
-# (the landing gate); prior-green oracles rotate by thirds per round.
-WITH_ORACLE = suite_rotation(
-    sorted(n for n, q in _ALL.items() if q.oracle is not None)
-)
-NO_ORACLE = suite_rotation(
-    sorted(n for n, q in _ALL.items() if q.oracle is None)
-)
+WITH_ORACLE = sorted(n for n, q in _ALL.items() if q.oracle is not None)
+NO_ORACLE = sorted(n for n, q in _ALL.items() if q.oracle is None)
 
 
 @pytest.fixture(scope="module")

@@ -2,23 +2,19 @@
 match DuckDB exactly at sf0.001 (fast) — the same check the driver runs
 at sf0.01. Queries without an oracle get a rows-run smoke check.
 
-Round 13: the net rotates by QUARTERS (registry.oracle_rotation) —
-never-green and tier-2/3 names always run (the landing gate is
-full-strength), prior-green names re-audit at least every 4 rounds.
-At 403 registered queries the never-rotated net pushed the suite to
-19:46, past the 15-min guard; the driver's own sf0.01 snapshot still
-re-checks the priority window every round regardless."""
+Every registered query is a case; tier-1 runs the cases listed in
+``per_query_net.txt`` (see ``conftest.py``)."""
 
 from __future__ import annotations
 
 import pytest
 
 from kafka_streams_aggregate_spark.oracle import check_query, duck_con_for
-from kafka_streams_aggregate_spark.registry import load_all, oracle_rotation
+from kafka_streams_aggregate_spark.registry import load_all
 
 SF_DIR = "/root/testdata/sf0.001"
 
-QUERY_NAMES = oracle_rotation(sorted(load_all().keys()))
+QUERY_NAMES = sorted(load_all())
 
 
 @pytest.fixture(scope="module")

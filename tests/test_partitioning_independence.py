@@ -6,13 +6,16 @@ changes when the partitioning changes, some aggregate depends on
 partial-aggregation order (the classic double-sum bug) or an ordering
 lacks a total order. The determinism rules (decimal money sums, total
 orders on every limit, sequential vector folds) exist to make this
-test pass — it is the regression net over all of them."""
+test pass — it is the regression net over all of them.
+
+Every registered query is a case; tier-1 runs the cases listed in
+``per_query_net.txt`` (see ``conftest.py``)."""
 
 from __future__ import annotations
 
 import pytest
 
-from kafka_streams_aggregate_spark.registry import load_all, suite_rotation
+from kafka_streams_aggregate_spark.registry import load_all
 
 SF = "/root/testdata/sf0.001"
 
@@ -20,12 +23,7 @@ SF = "/root/testdata/sf0.001"
 # runtime (convergence rounds dominate, not partitioning).
 EXCLUDED = {"q_dedup_clusters"}
 
-# Suite-time rotation (round 10): never-green (new/changed) queries
-# always run — the landing gate is full-strength — prior-green ones
-# rotate by thirds per round, full re-audit every 3 rounds.
-QUERY_NAMES = suite_rotation(
-    sorted(n for n in load_all() if n not in EXCLUDED)
-)
+QUERY_NAMES = sorted(n for n in load_all() if n not in EXCLUDED)
 
 
 def _canon(df):

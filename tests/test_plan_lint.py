@@ -13,6 +13,9 @@ Queries whose build EXECUTES work (streaming merges, manifest
 round-trips) return checkpointed results whose plan is a scan — they
 pass trivially, which is correct: their heavy lifting is plan-audited
 by their own dedicated tests.
+
+Every registered query is a case; tier-1 runs the cases listed in
+``per_query_net.txt`` (see ``conftest.py``).
 """
 
 from __future__ import annotations
@@ -20,7 +23,7 @@ from __future__ import annotations
 import pytest
 
 from kafka_streams_aggregate_spark.plans.inspect import formatted_plan
-from kafka_streams_aggregate_spark.registry import load_all, suite_rotation
+from kafka_streams_aggregate_spark.registry import load_all
 
 SF = "/root/testdata/sf0.001"
 
@@ -51,11 +54,7 @@ EXECUTES_AT_BUILD = {
     "q_cusum_stream", "q_ss_policy_stream", "q_xml_roundtrip",
 }
 
-# Suite-time rotation (round 10): never-green queries always lint;
-# prior-green plans (static unless code changed) rotate by thirds.
-QUERY_NAMES = suite_rotation(
-    sorted(n for n in load_all() if n not in EXECUTES_AT_BUILD)
-)
+QUERY_NAMES = sorted(n for n in load_all() if n not in EXECUTES_AT_BUILD)
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)

@@ -32,6 +32,11 @@ def _cmp(got, exp, keys):
         got = got.sort_values(keys).reset_index(drop=True)
         exp = exp.sort_values(keys).reset_index(drop=True)
     assert len(got) == len(exp) > 0
+    # Spark returns NULL in object columns as None, DuckDB as NaN: spell
+    # both as None so the frames compare null for null.
+    for df in (got, exp):
+        for c in df.columns[df.dtypes == object]:
+            df[c] = df[c].where(df[c].notna(), None)
     pd.testing.assert_frame_equal(
         got[sorted(got.columns)], exp[sorted(exp.columns)], check_dtype=False
     )

@@ -425,7 +425,10 @@ def bipartite_projection(
     cosine). With ``max_degree=None`` the audit column is omitted and
     behavior is unchanged.
 
-    Input ``pairs`` must be DISTINCT (left, right) tuples. Output:
+    Input ``pairs`` must be DISTINCT (left, right) tuples, and with
+    ``max_degree`` set their left keys must be non-null: the degree
+    window groups NULL left keys together and keeps them while the
+    group is under the cap. Output:
     (item_a, item_b, n_common, n_a, n_b, weight, rank[, n_capped]).
     """
     lc, rc = left_col, right_col

@@ -15,6 +15,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Holds only the worker daemon module (see get_spark).
+_WORKER_DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "worker")
+
 
 def _default_driver_mem() -> str:
     """Heap default for the single local JVM: min(32g, ~75% of
@@ -52,7 +55,30 @@ def get_spark(
         JVM<->Python in Arrow batches, never row-at-a-time.
       - Session timezone pinned UTC so timestamp semantics match the
         (UTC-naive) DuckDB oracle and are cluster-location-independent.
+      - Python worker daemon: pyspark calls ``importlib.invalidate_caches()``
+        in every Python task, and under CPython 3.11 that re-parses the
+        directories of pyspark.zip, py4j and the spark-core jar (~27k
+        entries, 0.15-0.5 s of a stateful micro-batch task whose own
+        work is ~50 ms). ``local`` masters run Spark's daemon through
+        ``worker/ksa_worker_daemon.py`` (``spark.python.daemon.module``),
+        which re-reads an archive only when it changed on disk. Its
+        directory goes on the workers' ``PYTHONPATH`` and holds nothing
+        else, so workers still cannot import this package and UDF
+        closures must stay self-contained. Other masters keep Spark's
+        stock daemon: a cluster's executors do not have this path.
     """
+    spark = _builder(app_name, master, shuffle_partitions, extra_conf).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def _builder(
+    app_name: str,
+    master: str | None,
+    shuffle_partitions: int | None,
+    extra_conf: dict[str, str] | None,
+) -> SparkSession.Builder:
+    """``get_spark``'s builder, before ``getOrCreate``."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
@@ -94,9 +120,11 @@ def get_spark(
         # references are dead.
         .config("spark.cleaner.periodicGC.interval", "2min")
     )
+    if master.split("[")[0] == "local":
+        builder = builder.config(
+            "spark.python.daemon.module", "ksa_worker_daemon"
+        ).config("spark.executorEnv.PYTHONPATH", _WORKER_DAEMON_DIR)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return builder

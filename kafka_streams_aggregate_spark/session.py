@@ -13,10 +13,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 # Holds only the worker daemon module (see get_spark).
 _WORKER_DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "worker")
+
+# Spark's checkpoint file manager over Hadoop FileSystem (see get_spark).
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def _default_driver_mem() -> str:
@@ -66,6 +70,18 @@ def get_spark(
         else, so workers still cannot import this package and UDF
         closures must stay self-contained. Other masters keep Spark's
         stock daemon: a cluster's executors do not have this path.
+      - Checkpoint file manager: without the native Hadoop library,
+        every ``FileContext.rename`` of Spark's default checkpoint
+        manager forks ``readlink`` about 4 times (~3 ms each) to check
+        link status. Offsets, commits and state deltas are all renamed
+        into place, so a fold_drain micro-batch forked ~140 processes
+        (~95 ``readlink``, ~45 ``chmod``). ``local`` masters set
+        ``spark.sql.streaming.checkpointFileManagerClass`` to Spark's
+        ``FileSystemBasedCheckpointFileManager``, whose rename on
+        ``file:`` is one exists check plus ``File.renameTo``: the same
+        files, checksums included, with no ``readlink``. Other masters
+        keep the default, because HDFS and object-store checkpoints
+        need FileContext's rename.
     """
     spark = _builder(app_name, master, shuffle_partitions, extra_conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -81,7 +97,7 @@ def _builder(
     """``get_spark``'s builder, before ``getOrCreate``."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    n_shuffle = shuffle_partitions or int(cpus)
 
     builder = (
         SparkSession.builder.master(master)
@@ -121,9 +137,14 @@ def _builder(
         .config("spark.cleaner.periodicGC.interval", "2min")
     )
     if master.split("[")[0] == "local":
-        builder = builder.config(
-            "spark.python.daemon.module", "ksa_worker_daemon"
-        ).config("spark.executorEnv.PYTHONPATH", _WORKER_DAEMON_DIR)
+        builder = (
+            builder.config("spark.python.daemon.module", "ksa_worker_daemon")
+            .config("spark.executorEnv.PYTHONPATH", _WORKER_DAEMON_DIR)
+            .config(
+                "spark.sql.streaming.checkpointFileManagerClass",
+                _FS_CHECKPOINT_MANAGER,
+            )
+        )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

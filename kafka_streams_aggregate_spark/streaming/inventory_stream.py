@@ -32,9 +32,13 @@ batch, 4 vCPUs) the per-bucket fold drained a median 2,480 events/s
 against 1,440 per key (ten pairs). The worker daemon of local sessions
 (``session.py``) then removed a 0.15-0.5 s re-parse of pyspark.zip from
 every Python task: 2,560 events/s against 1,820 without it (ten pairs),
-and fold_live p50 latency 1,425 ms against 1,870. What is left of a
-micro-batch is mostly JVM-side (state commit 0.33-0.4 s, ~0.3 s per stateful
-task), not the fold. In a warm session over the same
+and fold_live p50 latency 1,425 ms against 1,870. Most of the JVM-side
+rest was forked ``readlink`` processes, ~3 ms each, in every checkpoint
+rename (state deltas, offsets, commits); local sessions' checkpoint
+manager (``session.py``) renames without them. The state commit fell
+from 401 to 33 ms per batch (one traced pair), and fold_drain drained
+3,510 events/s against 2,937 (twenty pairs). The fold is still not
+what a micro-batch spends its time on. In a warm session over the same
 drains, 4, 64 and 256 buckets took 3.3-4.0 s and 1,024 buckets 5.6 s
 (per key: 6.9 s): the saving needs far fewer buckets than the keys a
 batch changes. 64 keeps that margin down to batches of a few hundred

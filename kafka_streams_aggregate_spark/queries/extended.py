@@ -22,8 +22,12 @@ from kafka_streams_aggregate_spark.functions.money import (
     money_sum,
     money_sum_sql,
 )
+from kafka_streams_aggregate_spark.operators.inventory_fold import latest_per_key
 from kafka_streams_aggregate_spark.registry import register
-from kafka_streams_aggregate_spark.sources.tables import load_table
+from kafka_streams_aggregate_spark.sources.tables import (
+    load_table,
+    staged_two_batch,
+)
 
 # Exact-decimal revenue term shared by the TPC-H shapes.
 _REV_SQL = (
@@ -1723,14 +1727,13 @@ def q_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the batch lead() reduction — which is the oracle, so "
         "cross-batch state carry, per-key ordering, and the time "
         "bound are all hash-verified. Scale shape: one hash exchange "
-        "per micro-batch on the key, Arrow-batched state functions, "
-        "and the manifest sink's distributed append commit."
+        "per micro-batch, one Python call per touched hash bucket of "
+        "users (streaming/keyed_fold.py), and the manifest sink's "
+        "distributed append commit."
     ),
     tags=("cep", "streaming", "stateful"),
 )
 def q_cep_pattern_match_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
     import shutil
     import tempfile
 
@@ -1743,10 +1746,8 @@ def q_cep_pattern_match_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     work = tempfile.mkdtemp(prefix="ksa_cepstream_")
-    src = f"{work}/src"
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        os.makedirs(src)
         # Two time-split files (maxFilesPerTrigger=1, mtime order) give
         # per-user event-time order ACROSS batches — the ingest property
         # the cross-batch state carry depends on.
@@ -1756,27 +1757,11 @@ def q_cep_pattern_match_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.expr("unix_micros(ts)").alias("ts_us"),
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC in micros
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = (
-            spark.readStream.schema(
-                "event_id long, user_id long, event_type string, ts_us long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        raw = staged_two_batch(
+            spark, base, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+            "event_id long, user_id long, event_type string, ts_us long", work,
         )
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         matches = streaming_cep_matches(raw, _CEP_WINDOW_US)
         committed = run_stream_committed(
             matches, work, "append", CEP_OUT_SCHEMA
@@ -2068,14 +2053,13 @@ def q_cep_quantified(spark: SparkSession, sf_dir: str) -> DataFrame:
         "window reduction over the same events, so cross-batch "
         "quantifier carry, per-key ordering, the >= 1 click guard, "
         "and the 24h bound are all hash-verified. Scale shape: one "
-        "hash exchange per micro-batch, Arrow-batched state function, "
+        "hash exchange per micro-batch, one Python call per touched "
+        "hash bucket of users (streaming/keyed_fold.py), "
         "manifest-sink distributed append commit."
     ),
     tags=("cep", "streaming", "stateful"),
 )
 def q_cep_quantified_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
     import shutil
     import tempfile
 
@@ -2088,37 +2072,19 @@ def q_cep_quantified_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     work = tempfile.mkdtemp(prefix="ksa_cepqstream_")
-    src = f"{work}/src"
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        os.makedirs(src)
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "user_id",
             "event_type",
             F.expr("unix_micros(ts)").alias("ts_us"),
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC in micros
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = (
-            spark.readStream.schema(
-                "event_id long, user_id long, event_type string, ts_us long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        raw = staged_two_batch(
+            spark, base, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+            "event_id long, user_id long, event_type string, ts_us long", work,
         )
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         matches = streaming_cep_quantified(raw, _CEP_WINDOW_US)
         committed = run_stream_committed(
             matches, work, "append", CEPQ_OUT_SCHEMA
@@ -2181,14 +2147,13 @@ def q_cep_quantified_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "running-changelog complement to the windowed "
         "session_window aggregates: the KTable-style 'current totals "
         "per user' a dashboard reads. Scale shape: one hash exchange "
-        "per micro-batch, O(1) state per key, manifest-sink commit, "
+        "per micro-batch, each user's state in its hash bucket's "
+        "state row (streaming/keyed_fold.py), manifest-sink commit, "
         "latest-batch-wins read-back."
     ),
     tags=("sessionize", "streaming", "stateful"),
 )
 def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
     import shutil
     import tempfile
 
@@ -2201,49 +2166,26 @@ def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     work = tempfile.mkdtemp(prefix="ksa_sessstream_")
-    src = f"{work}/src"
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        os.makedirs(src)
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "user_id",
             F.expr("unix_micros(ts)").alias("ts_us"),
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC in micros
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = (
-            spark.readStream.schema(
-                "event_id long, user_id long, ts_us long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        raw = staged_two_batch(
+            spark, base, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+            "event_id long, user_id long, ts_us long", work,
         )
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         committed = run_stream_committed(
             streaming_sessionize(raw, 1800), work, "update",
             SESSION_OUT_SCHEMA,
         )
-        w = Window.partitionBy("user_id").orderBy(F.col("_batch").desc())
-        return (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                "user_id", "n_sessions", "n_events", "max_session_events"
-            )
-            .localCheckpoint(eager=True)
-        )
+        return latest_per_key(
+            committed, ["user_id"], "_batch",
+            ["n_sessions", "n_events", "max_session_events"],
+        ).localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         shutil.rmtree(work, ignore_errors=True)
@@ -2757,8 +2699,6 @@ def q_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sessionize", "streaming", "stateful", "ttl"),
 )
 def q_sessionize_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
     import shutil
     import tempfile
 
@@ -2771,38 +2711,22 @@ def q_sessionize_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     work = tempfile.mkdtemp(prefix="ksa_sessttl_")
-    src = f"{work}/src"
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        os.makedirs(src)
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "user_id",
             F.expr("unix_micros(ts)").alias("ts_us"),
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC in micros
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         raw = (
-            spark.readStream.schema(
-                "event_id long, user_id long, ts_us long"
+            staged_two_batch(
+                spark, base, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+                "event_id long, user_id long, ts_us long", work,
             )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
             .withColumn("ts", F.timestamp_micros("ts_us"))
             .withWatermark("ts", "0 seconds")
         )
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         committed = run_stream_committed(
             streaming_sessionize_ttl(raw, 1800), work, "append",
             SESSION_TTL_OUT_SCHEMA,
@@ -3335,14 +3259,13 @@ def q_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "streamed result is BIT-equal to the batch fold and the "
         "recursive-CTE oracle — the state carry itself is what the "
         "hash verifies. Update-mode changelog through the committed "
-        "manifest sink, latest batch wins per user. O(1) state per "
-        "series, one exchange per micro-batch."
+        "manifest sink, latest batch wins per user. One exchange per "
+        "micro-batch; each series' state sits in its hash bucket's "
+        "state row (streaming/keyed_fold.py)."
     ),
     tags=("streaming", "timeseries", "stateful-fold"),
 )
 def q_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
     import shutil
     import tempfile
 
@@ -3355,47 +3278,25 @@ def q_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     work = tempfile.mkdtemp(prefix="ksa_ewmastream_")
-    src = f"{work}/src"
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        os.makedirs(src)
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "user_id",
             F.expr("unix_micros(ts)").alias("ts_us"),
             "value",
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC in micros
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = (
-            spark.readStream.schema(
-                "event_id long, user_id long, ts_us long, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        raw = staged_two_batch(
+            spark, base, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+            "event_id long, user_id long, ts_us long, value double", work,
         )
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         committed = run_stream_committed(
             streaming_ewma(raw), work, "update", EWMA_OUT_SCHEMA
         )
-        w = Window.partitionBy("user_id").orderBy(F.col("_batch").desc())
-        return (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("user_id", "n_events", "ewma_last")
-            .localCheckpoint(eager=True)
-        )
+        return latest_per_key(
+            committed, ["user_id"], "_batch", ["n_events", "ewma_last"]
+        ).localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         shutil.rmtree(work, ignore_errors=True)

@@ -185,13 +185,9 @@ def q_agg_inventory_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Changelog contract: latest batch wins per key. localCheckpoint
         # materializes executor-side before the work dir is removed.
-        w = Window.partitionBy("product_code").orderBy(F.col("_batch").desc())
-        return (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("product_code", "count")
-            .localCheckpoint(eager=True)
-        )
+        return latest_per_key(
+            committed, ["product_code"], "_batch", ["count"]
+        ).localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         shutil.rmtree(work, ignore_errors=True)
@@ -618,13 +614,9 @@ def q_custom_source_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
         committed = run_stream_committed(
             folded, work, "update", "product_code string, count bigint"
         )
-        w = Window.partitionBy("product_code").orderBy(F.col("_batch").desc())
-        return (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("product_code", "count")
-            .localCheckpoint(eager=True)
-        )
+        return latest_per_key(
+            committed, ["product_code"], "_batch", ["count"]
+        ).localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         shutil.rmtree(work, ignore_errors=True)

@@ -19,9 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_streams_aggregate_spark.operators.inventory_fold import latest_per_key
 from kafka_streams_aggregate_spark.registry import register
 from kafka_streams_aggregate_spark.sources.tables import (
     load_table,
+    staged_two_batch,
     with_scan_parallelism,
 )
 
@@ -2411,33 +2413,6 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _staged_two_batch(spark, base, split_col, cutoff, schema_ddl, work):
-    """Write base split at cutoff into two source files whose mtimes
-    order them, and return the readStream (1 file per trigger)."""
-    import glob
-    import os
-    import shutil
-
-    src = f"{work}/src"
-    os.makedirs(src)
-    for name, pred in (
-        ("e1", F.col(split_col) < cutoff),
-        ("e2", F.col(split_col) >= cutoff),
-    ):
-        tmp = f"{work}/{name}_dir"
-        base.filter(pred).coalesce(1).write.parquet(tmp)
-        [part] = glob.glob(f"{tmp}/part-*.parquet")
-        shutil.move(part, f"{src}/{name}.parquet")
-    now = os.path.getmtime(f"{src}/e1.parquet")
-    os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-    os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-    return (
-        spark.readStream.schema(schema_ddl)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-
-
 @register(
     "q_cusum_stream",
     oracle="""
@@ -2488,8 +2463,6 @@ def q_cusum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from pyspark.sql import Window
-
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
         run_stream_committed,
     )
@@ -2507,7 +2480,7 @@ def q_cusum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("unix_micros(ts)").alias("ts_us"),
             "value",
         )
-        raw = _staged_two_batch(
+        raw = staged_two_batch(
             spark, base, "ts_us", 1705363200000000,
             "event_id long, user_id long, ts_us long, value double", work,
         )
@@ -2515,15 +2488,10 @@ def q_cusum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         committed = run_stream_committed(
             streaming_cusum(raw), work, "update", CUSUM_OUT_SCHEMA
         )
-        w = Window.partitionBy("user_id").orderBy(F.col("_batch").desc())
-        return (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                "user_id", "n_events", "cusum_last", "cusum_max", "n_alarms"
-            )
-            .localCheckpoint(eager=True)
-        )
+        return latest_per_key(
+            committed, ["user_id"], "_batch",
+            ["n_events", "cusum_last", "cusum_max", "n_alarms"],
+        ).localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         shutil.rmtree(work, ignore_errors=True)
@@ -2587,20 +2555,17 @@ def q_cusum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "verifies exactly the cross-batch state carry. Both policy "
         "branches fire across the batch boundary "
         "(tests/test_ss_stream.py, which runs the FULL product set). "
-        "The registered demo scopes to products % 16 == 0: "
-        "applyInPandasWithState pays one pandas round trip per "
-        "(product, batch), so the full 20k-product set costs "
-        "~40k Python calls for zero extra verification value — "
-        "the recursive-CTE-breadth scoping rule applied to "
-        "streaming state."
+        "The registered demo and its oracle both scope to products "
+        "% 16 == 0, the recursive-CTE-breadth scoping rule. The fold "
+        "itself calls Python once per touched hash bucket of "
+        "products (streaming/keyed_fold.py), not once per "
+        "(product, batch)."
     ),
     tags=("streaming", "inventory", "policy", "stateful-fold"),
 )
 def q_ss_policy_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
-
-    from pyspark.sql import Window
 
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
         run_stream_committed,
@@ -2624,22 +2589,17 @@ def q_ss_policy_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("qty")
             )
         )
-        raw = _staged_two_batch(
+        raw = staged_two_batch(
             spark, daily, "d", 9300, "product long, d long, qty long", work
         )
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         committed = run_stream_committed(
             streaming_ss_policy(raw), work, "update", SS_OUT_SCHEMA
         )
-        w = Window.partitionBy("product").orderBy(F.col("_batch").desc())
-        return (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                "product", "n_days", "lost_sales", "n_orders", "end_on_hand"
-            )
-            .localCheckpoint(eager=True)
-        )
+        return latest_per_key(
+            committed, ["product"], "_batch",
+            ["n_days", "lost_sales", "n_orders", "end_on_hand"],
+        ).localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         shutil.rmtree(work, ignore_errors=True)

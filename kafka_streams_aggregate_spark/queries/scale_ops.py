@@ -28,9 +28,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_aggregate_spark.operators import sketches as sk
+from kafka_streams_aggregate_spark.operators.inventory_fold import latest_per_key
 from kafka_streams_aggregate_spark.registry import register
 from kafka_streams_aggregate_spark.sources.tables import (
     load_table,
+    staged_two_batch,
     with_scan_parallelism,
 )
 
@@ -1169,8 +1171,6 @@ def q_quantile_sketch_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sketch", "streaming", "stateful"),
 )
 def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
     import shutil
     import tempfile
 
@@ -1179,36 +1179,18 @@ def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     work = tempfile.mkdtemp(prefix="ksa_streamhll_")
-    src = f"{work}/src"
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        os.makedirs(src)
         base = load_table(spark, "events", sf_dir).select(
             "user_id",
             "event_type",
             F.expr("unix_micros(ts)").alias("ts_us"),
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC in micros
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = (
-            spark.readStream.schema(
-                "user_id long, event_type string, ts_us long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        raw = staged_two_batch(
+            spark, base, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+            "user_id long, event_type string, ts_us long", work,
         )
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         regs_stream = (
             sk.hll_row_terms(raw, F.col("user_id"), F.col("event_type"))
             .groupBy("grp", "idx")
@@ -1217,11 +1199,8 @@ def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         committed = run_stream_committed(
             regs_stream, work, "update", "grp string, idx int, r int"
         )
-        w = Window.partitionBy("grp", "idx").orderBy(F.col("_batch").desc())
-        final_regs = (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("grp", "idx", "r")
+        final_regs = latest_per_key(
+            committed, ["grp", "idx"], "_batch", ["r"]
         )
         return (
             sk.hll_summarize(final_regs)
@@ -1652,8 +1631,6 @@ _SQSK_NBINS = 1024  # events.value observed in [0, ~560]
     tags=("sketch", "percentile", "streaming", "stateful"),
 )
 def q_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
     import shutil
     import tempfile
 
@@ -1662,36 +1639,18 @@ def q_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     work = tempfile.mkdtemp(prefix="ksa_streamqsk_")
-    src = f"{work}/src"
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        os.makedirs(src)
         base = load_table(spark, "events", sf_dir).select(
             "event_type",
             "value",
             F.expr("unix_micros(ts)").alias("ts_us"),
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC in micros
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = (
-            spark.readStream.schema(
-                "event_type string, value double, ts_us long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        raw = staged_two_batch(
+            spark, base, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+            "event_type string, value double, ts_us long", work,
         )
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         bin_col = F.least(
             F.floor(F.col("value") / F.lit(float(_SQSK_WIDTH))).cast(
                 "bigint"
@@ -1709,13 +1668,8 @@ def q_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             binned_stream, work, "update",
             "event_type string, bin bigint, c bigint",
         )
-        w = Window.partitionBy("event_type", "bin").orderBy(
-            F.col("_batch").desc()
-        )
-        final_bins = (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("event_type", "bin", "c")
+        final_bins = latest_per_key(
+            committed, ["event_type", "bin"], "_batch", ["c"]
         )
         return (
             sk.hist_quantile_recover(final_bins, "event_type", _SQSK_WIDTH)

@@ -84,6 +84,43 @@ def stream_events(
     return raw.select(*columns)
 
 
+def staged_two_batch(
+    spark: SparkSession,
+    base: DataFrame,
+    split_col: str,
+    cutoff,
+    schema_ddl: str,
+    work: str,
+) -> DataFrame:
+    """Stream ``base`` as two micro-batches: the rows with ``split_col <
+    cutoff``, then the rest. Each part is written as one parquet file
+    under ``{work}/src`` with mtimes that order them, and the returned
+    ``readStream`` (``schema_ddl``) takes one file per trigger. Split on
+    event time, this gives every key its events in time order across
+    the batch boundary, the ingest order the stateful folds rely on."""
+    import glob
+    import shutil
+
+    src = f"{work}/src"
+    os.makedirs(src)
+    for name, pred in (
+        ("e1", F.col(split_col) < cutoff),
+        ("e2", F.col(split_col) >= cutoff),
+    ):
+        tmp = f"{work}/{name}_dir"
+        base.filter(pred).coalesce(1).write.parquet(tmp)
+        [part] = glob.glob(f"{tmp}/part-*.parquet")
+        shutil.move(part, f"{src}/{name}.parquet")
+    now = os.path.getmtime(f"{src}/e1.parquet")
+    os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
+    os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
+    return (
+        spark.readStream.schema(schema_ddl)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+
+
 def with_scan_parallelism(df: DataFrame, floor: int | None = None) -> DataFrame:
     """Round-robin repartition a scan up to the session's core count —
     a no-op when the plan already has at least that many partitions.

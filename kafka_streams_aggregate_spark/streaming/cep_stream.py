@@ -16,18 +16,20 @@ N's events for a key all precede batch N+1's) — the property a
 time-partitioned ingest (Kafka per-partition order, time-split files)
 provides. Within a batch rows are sorted by (ts_us, event_id).
 
-Scale shape: one hash exchange on the grouping key per micro-batch,
-Arrow-batched Python state functions, O(1) state per key; matches are
-emitted append-mode in the batch where their final event arrives, so
-no match is ever double-counted (a triple needs 3 events and the
-carried state holds only 2 — its last element is always current-batch).
+Scale shape: one hash exchange per micro-batch; a key's partial-match
+state is a few scalars, kept in its hash bucket's state row
+(``keyed_fold``: one Python call per touched bucket, not per key);
+matches are emitted append-mode in the batch where their final event
+arrives, so no match is ever double-counted (a triple needs 3 events
+and the carried state holds only 2 — its last element is always
+current-batch).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
+
+from kafka_streams_aggregate_spark.streaming.keyed_fold import keyed_fold
 
 CEP_STATE_SCHEMA = "p1_type string, p1_ts long, p2_type string, p2_ts long"
 CEP_OUT_SCHEMA = (
@@ -43,25 +45,15 @@ def streaming_cep_matches(events: DataFrame, window_us: int) -> DataFrame:
     matches (count + time bounds). Pattern must complete within
     ``window_us`` microseconds."""
 
-    # NESTED so cloudpickle ships it by value (self-contained-closure
-    # rule: executors never need this package importable).
-    def _match_group(key, pdf_iter, state):
-        import pandas as pd
-
+    def step(user, state, rows):
         buf = []  # carried last-2 events: [(event_type, ts_us), ...]
-        if state.exists:
-            p1t, p1s, p2t, p2s = state.get
+        if state is not None:
+            p1t, p1s, p2t, p2s = state
             if p1t is not None:
-                buf.append((p1t, int(p1s)))
+                buf.append((p1t, p1s))
             if p2t is not None:
-                buf.append((p2t, int(p2s)))
-        rows = [pdf for pdf in pdf_iter]
-        batch = pd.concat(rows) if len(rows) > 1 else rows[0]
-        batch = batch.sort_values(["ts_us", "event_id"])
-        seq = buf + [
-            (t, int(ts))
-            for t, ts in zip(batch["event_type"], batch["ts_us"])
-        ]
+                buf.append((p2t, p2s))
+        seq = buf + [(t, ts) for ts, _id, t in rows]
         n = 0
         first = None
         last = None
@@ -80,26 +72,13 @@ def streaming_cep_matches(events: DataFrame, window_us: int) -> DataFrame:
                 first = ts0 if first is None else min(first, ts0)
                 last = ts2 if last is None else max(last, ts2)
         tail = seq[-2:]
-        if len(tail) == 2:
-            state.update((tail[0][0], tail[0][1], tail[1][0], tail[1][1]))
-        elif len(tail) == 1:
-            state.update((None, None, tail[0][0], tail[0][1]))
-        if n > 0:
-            yield pd.DataFrame(
-                {
-                    "user_id": [int(key[0])],
-                    "n_matches": [n],
-                    "batch_first_start_us": [first],
-                    "batch_last_end_us": [last],
-                }
-            )
+        new = tail[0] + tail[1] if len(tail) == 2 else (None, None) + tail[0]
+        return new, [(user, n, first, last)] if n > 0 else []
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        _match_group,
-        outputStructType=CEP_OUT_SCHEMA,
-        stateStructType=CEP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        events.select("user_id", "ts_us", "event_id", "event_type"),
+        "user_id", ["ts_us", "event_id"],
+        CEP_STATE_SCHEMA, CEP_OUT_SCHEMA, step, "append",
     )
 
 
@@ -131,23 +110,14 @@ def streaming_cep_quantified(events: DataFrame, window_us: int) -> DataFrame:
     none is ever double-counted.
     """
 
-    def _match_group(key, pdf_iter, state):
-        import pandas as pd
-
-        b_type, b_ts, clicks = None, None, 0
-        if state.exists:
-            st, sts, sc = state.get
-            b_type, b_ts, clicks = st, sts, int(sc)
-        rows = [pdf for pdf in pdf_iter]
-        batch = pd.concat(rows) if len(rows) > 1 else rows[0]
-        batch = batch.sort_values(["ts_us", "event_id"])
+    def step(user, state, rows):
+        b_type, b_ts, clicks = state or (None, None, 0)
         n = 0
         total_b = 0
         max_b = 0
         first = None
         last = None
-        for t, ts in zip(batch["event_type"], batch["ts_us"]):
-            ts = int(ts)
+        for ts, _id, t in rows:
             if t == "click":
                 clicks += 1
                 continue
@@ -163,23 +133,11 @@ def streaming_cep_quantified(events: DataFrame, window_us: int) -> DataFrame:
                 first = b_ts if first is None else min(first, b_ts)
                 last = ts if last is None else max(last, ts)
             b_type, b_ts, clicks = t, ts, 0
-        state.update((b_type, b_ts, clicks))
-        if n > 0:
-            yield pd.DataFrame(
-                {
-                    "user_id": [int(key[0])],
-                    "n_matches": [n],
-                    "total_b_len": [total_b],
-                    "max_b_len": [max_b],
-                    "batch_first_start_us": [first],
-                    "batch_last_end_us": [last],
-                }
-            )
+        out = [(user, n, total_b, max_b, first, last)] if n > 0 else []
+        return (b_type, b_ts, clicks), out
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        _match_group,
-        outputStructType=CEPQ_OUT_SCHEMA,
-        stateStructType=CEPQ_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        events.select("user_id", "ts_us", "event_id", "event_type"),
+        "user_id", ["ts_us", "event_id"],
+        CEPQ_STATE_SCHEMA, CEPQ_OUT_SCHEMA, step, "append",
     )

@@ -19,14 +19,17 @@ across micro-batches by applyInPandasWithState; each batch sorts its
 slice by (ts_us, event_id), which the staged time-split source keeps
 globally ordered per key.
 
-Scale shape: one hash exchange per micro-batch; O(1) state per series
-forever; Arrow-batched transfer; no Python in any non-fold stage.
+Scale shape: one hash exchange per micro-batch; a series' four int64s
+are kept forever in its hash bucket's state row (``keyed_fold``: one
+Python call per touched bucket, not per series); no Python in any
+non-fold stage.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
+
+from kafka_streams_aggregate_spark.streaming.keyed_fold import keyed_fold
 
 CUSUM_STATE_SCHEMA = "s long, n long, n_alarms long, s_max long"
 CUSUM_OUT_SCHEMA = (
@@ -42,20 +45,12 @@ def streaming_cusum(
     value)``: one UPDATE row per (user, batch) with the running
     statistic, its max, and the alarm count so far."""
 
-    def _fold_group(key, pdf_iter, state):
+    def step(user, state, rows):
         import math
 
-        import pandas as pd
-
-        s, n, n_alarms, s_max = 0, 0, 0, 0
-        if state.exists:
-            s, n, n_alarms, s_max = (int(x) for x in state.get)
-        chunks = [pdf for pdf in pdf_iter]
-        batch = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        batch = batch.sort_values(["ts_us", "event_id"], kind="mergesort")
-        for v in batch["value"].astype("float64"):
-            d = int(math.floor(v * 100.0)) - k_cents
-            s = s + d
+        s, n, n_alarms, s_max = state or (0, 0, 0, 0)
+        for _ts, _id, v in rows:
+            s = s + int(math.floor(v * 100.0)) - k_cents
             if s < 0:
                 s = 0
             n += 1
@@ -63,21 +58,10 @@ def streaming_cusum(
                 s_max = s
             if s > h_cents:
                 n_alarms += 1
-        state.update((s, n, n_alarms, s_max))
-        yield pd.DataFrame(
-            {
-                "user_id": [int(key[0])],
-                "n_events": [n],
-                "cusum_last": [s],
-                "cusum_max": [s_max],
-                "n_alarms": [n_alarms],
-            }
-        )
+        return (s, n, n_alarms, s_max), [(user, n, s, s_max, n_alarms)]
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        _fold_group,
-        outputStructType=CUSUM_OUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        events.select("user_id", "ts_us", "event_id", "value"), "user_id",
+        ["ts_us", "event_id"], CUSUM_STATE_SCHEMA, CUSUM_OUT_SCHEMA, step,
+        "update",
     )

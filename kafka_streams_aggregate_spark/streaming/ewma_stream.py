@@ -12,14 +12,16 @@ is BIT-equal to the batch fold — and to the DuckDB recursive-CTE
 oracle — whenever batches respect per-key event-time order, which the
 staged time-split source guarantees.
 
-Scale shape: one hash exchange per micro-batch; O(1) state per series
-forever; Arrow-batched transfer.
+Scale shape: one hash exchange per micro-batch; a series' state is one
+float and a count, kept forever in its hash bucket's state row
+(``keyed_fold``: one Python call per touched bucket, not per series).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
+
+from kafka_streams_aggregate_spark.streaming.keyed_fold import keyed_fold
 
 EWMA_STATE_SCHEMA = "s double, n long"
 EWMA_OUT_SCHEMA = "user_id long, n_events long, ewma_last double"
@@ -31,33 +33,15 @@ def streaming_ewma(events: DataFrame) -> DataFrame:
     (user, batch) with the events-so-far count and current smoothed
     value."""
 
-    def _fold_group(key, pdf_iter, state):
-        import pandas as pd
-
-        s, n = None, 0
-        if state.exists:
-            s, n = state.get
-            s = float(s)
-            n = int(n)
-        chunks = [pdf for pdf in pdf_iter]
-        batch = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        batch = batch.sort_values(["ts_us", "event_id"], kind="mergesort")
-        for v in batch["value"].astype("float64"):
+    def step(user, state, rows):
+        s, n = state or (None, 0)
+        for _ts, _id, v in rows:
             s = v if s is None else 0.5 * v + 0.5 * s
             n += 1
-        state.update((s, n))
-        yield pd.DataFrame(
-            {
-                "user_id": [int(key[0])],
-                "n_events": [n],
-                "ewma_last": [s],
-            }
-        )
+        return (s, n), [(user, n, s)]
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        _fold_group,
-        outputStructType=EWMA_OUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        events.select("user_id", "ts_us", "event_id", "value"), "user_id",
+        ["ts_us", "event_id"], EWMA_STATE_SCHEMA, EWMA_OUT_SCHEMA, step,
+        "update",
     )

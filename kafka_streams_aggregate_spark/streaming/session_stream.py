@@ -18,13 +18,18 @@ the batch-oracle hash check verifies.
 
 Ingest contract (same as cep_stream): per-key event-time order across
 batches; within a batch rows sort by (ts_us, event_id). Scale shape:
-one hash exchange per micro-batch, O(1) state per key forever.
+one hash exchange per micro-batch; a key's five int64s are kept forever
+in its hash bucket's state row (``keyed_fold``: one Python call per
+touched bucket, not per key). The TTL fold below stays per key (see its
+docstring).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupStateTimeout
+
+from kafka_streams_aggregate_spark.streaming.keyed_fold import keyed_fold
 
 SESSION_STATE_SCHEMA = (
     "last_ts long, cur_events long, max_events long, "
@@ -43,19 +48,9 @@ def streaming_sessionize(events: DataFrame, gap_seconds: int) -> DataFrame:
 
     gap_us = gap_seconds * 1_000_000
 
-    def _fold_group(key, pdf_iter, state):
-        import pandas as pd
-
-        last_ts, cur, mx, ns, ne = None, 0, 0, 0, 0
-        if state.exists:
-            last_ts, cur, mx, ns, ne = (
-                v if v is None else int(v) for v in state.get
-            )
-        rows = [pdf for pdf in pdf_iter]
-        batch = pd.concat(rows) if len(rows) > 1 else rows[0]
-        batch = batch.sort_values(["ts_us", "event_id"])
-        for ts in batch["ts_us"]:
-            ts = int(ts)
+    def step(user, state, rows):
+        last_ts, cur, mx, ns, ne = state or (None, 0, 0, 0, 0)
+        for ts, _id in rows:
             if last_ts is None or ts - last_ts > gap_us:
                 ns += 1
                 cur = 0
@@ -63,22 +58,12 @@ def streaming_sessionize(events: DataFrame, gap_seconds: int) -> DataFrame:
             ne += 1
             mx = max(mx, cur)
             last_ts = ts
-        state.update((last_ts, cur, mx, ns, ne))
-        yield pd.DataFrame(
-            {
-                "user_id": [int(key[0])],
-                "n_sessions": [ns],
-                "n_events": [ne],
-                "max_session_events": [mx],
-            }
-        )
+        return (last_ts, cur, mx, ns, ne), [(user, ns, ne, mx)]
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        _fold_group,
-        outputStructType=SESSION_OUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        events.select("user_id", "ts_us", "event_id"), "user_id",
+        ["ts_us", "event_id"], SESSION_STATE_SCHEMA, SESSION_OUT_SCHEMA,
+        step, "update",
     )
 
 
@@ -124,7 +109,9 @@ def streaming_sessionize_ttl(events: DataFrame, gap_seconds: int) -> DataFrame:
     must carry a ``ts`` TimestampType column with a watermark (the
     caller sets ``withWatermark``) plus ``ts_us``/``event_id`` longs.
     Scale shape: one hash exchange per micro-batch; state is O(1) per
-    OPEN key and zero per expired key — the eviction is the point.
+    OPEN key and zero per expired key — the eviction is the point. It
+    stays per key, not on ``keyed_fold``'s buckets: a timeout fires per
+    group, and a bucket's would close every key in it at once.
     """
     gap_us = gap_seconds * 1_000_000
     gap_ms = gap_seconds * 1_000

@@ -15,14 +15,16 @@ cell-exact against the SAME recursive-CTE oracle the batch operator
 uses — the state carry across batches is precisely what the hash
 verifies.
 
-Scale shape: one hash exchange per micro-batch; O(1) state per product
-forever; Arrow-batched transfer.
+Scale shape: one hash exchange per micro-batch; the state of a product
+is four int64s, kept forever in its hash bucket's state row
+(``keyed_fold``: one Python call per touched bucket, not per product).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
+
+from kafka_streams_aggregate_spark.streaming.keyed_fold import keyed_fold
 
 SS_STATE_SCHEMA = "on_hand long, lost long, orders long, n_days long"
 SS_OUT_SCHEMA = (
@@ -38,17 +40,9 @@ def streaming_ss_policy(
     daily-demand rows: one UPDATE row per (product, batch) with the
     running day count, lost sales, order count, and position."""
 
-    def _fold_group(key, pdf_iter, state):
-        import pandas as pd
-
-        on_hand, lost, orders, n_days = s_big, 0, 0, 0
-        if state.exists:
-            on_hand, lost, orders, n_days = (int(x) for x in state.get)
-        chunks = [pdf for pdf in pdf_iter]
-        batch = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        batch = batch.sort_values("d", kind="mergesort")
-        for q in batch["qty"]:
-            q = int(q)
+    def step(product, state, rows):
+        on_hand, lost, orders, n_days = state or (s_big, 0, 0, 0)
+        for _d, q in rows:
             served = q if q <= on_hand else on_hand
             lost += q - served
             on_hand -= served
@@ -56,21 +50,11 @@ def streaming_ss_policy(
                 orders += 1
                 on_hand = s_big
             n_days += 1
-        state.update((on_hand, lost, orders, n_days))
-        yield pd.DataFrame(
-            {
-                "product": [int(key[0])],
-                "n_days": [n_days],
-                "lost_sales": [lost],
-                "n_orders": [orders],
-                "end_on_hand": [on_hand],
-            }
-        )
+        return (on_hand, lost, orders, n_days), [
+            (product, n_days, lost, orders, on_hand)
+        ]
 
-    return demand.groupBy("product").applyInPandasWithState(
-        _fold_group,
-        outputStructType=SS_OUT_SCHEMA,
-        stateStructType=SS_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        demand.select("product", "d", "qty"), "product", ["d"],
+        SS_STATE_SCHEMA, SS_OUT_SCHEMA, step, "update",
     )

@@ -62,67 +62,47 @@ def test_reflection_identity(ds):
 
 
 def test_cusum_stream_parity_sf0001(spark):
-    import glob
-    import os
     import shutil
     import tempfile
 
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from kafka_streams_aggregate_spark.operators.inventory_fold import (
+        latest_per_key,
+    )
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
         run_stream_committed,
     )
-    from kafka_streams_aggregate_spark.sources.tables import load_table
+    from kafka_streams_aggregate_spark.sources.tables import (
+        load_table,
+        staged_two_batch,
+    )
     from kafka_streams_aggregate_spark.streaming.cusum_stream import (
         CUSUM_OUT_SCHEMA,
         streaming_cusum,
     )
 
     work = tempfile.mkdtemp(prefix="ksa_cusumstream_")
-    src = f"{work}/src"
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        os.makedirs(src)
         base = load_table(spark, "events", SF).select(
             "event_id",
             "user_id",
             F.expr("unix_micros(ts)").alias("ts_us"),
             "value",
         )
-        cutoff_us = 1705363200000000  # 2024-01-16 00:00:00 UTC
-        for name, pred in (
-            ("e1", F.col("ts_us") < cutoff_us),
-            ("e2", F.col("ts_us") >= cutoff_us),
-        ):
-            tmp = f"{work}/{name}_dir"
-            base.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = (
-            spark.readStream.schema(
-                "event_id long, user_id long, ts_us long, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        raw = staged_two_batch(
+            spark, base, "ts_us", 1705363200000000,  # 2024-01-16 UTC
+            "event_id long, user_id long, ts_us long, value double", work,
         )
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         committed = run_stream_committed(
             streaming_cusum(raw), work, "update", CUSUM_OUT_SCHEMA
         )
-        w = Window.partitionBy("user_id").orderBy(F.col("_batch").desc())
-        got_df = (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                "user_id", "n_events", "cusum_last", "cusum_max", "n_alarms"
-            )
-            .localCheckpoint(eager=True)
-        )
+        got_df = latest_per_key(
+            committed, ["user_id"], "_batch",
+            ["n_events", "cusum_last", "cusum_max", "n_alarms"],
+        ).localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         shutil.rmtree(work, ignore_errors=True)

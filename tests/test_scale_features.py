@@ -165,43 +165,28 @@ def test_streaming_cep_match_straddles_batch_boundary(spark, tmp_path):
     # view+click arrive in micro-batch 1, purchase in micro-batch 2:
     # only the carried last-2-events state can complete the run. A
     # batch-local matcher would report zero matches.
-    import os
-
     from pyspark.sql import functions as F
 
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
         run_stream_committed,
     )
+    from kafka_streams_aggregate_spark.sources.tables import staged_two_batch
     from kafka_streams_aggregate_spark.streaming.cep_stream import (
         CEP_OUT_SCHEMA,
         streaming_cep_matches,
     )
 
     work = str(tmp_path)
-    src = f"{work}/src"
-    os.makedirs(src)
     ddl = "event_id long, user_id long, event_type string, ts_us long"
-    b1 = spark.createDataFrame(
-        [(1, 7, "view", 1_000_000), (2, 7, "click", 2_000_000)], ddl
+    events = spark.createDataFrame(
+        [
+            (1, 7, "view", 1_000_000),
+            (2, 7, "click", 2_000_000),
+            (3, 7, "purchase", 3_000_000),  # micro-batch 2
+        ],
+        ddl,
     )
-    b2 = spark.createDataFrame([(3, 7, "purchase", 3_000_000)], ddl)
-    for name, df in (("e1", b1), ("e2", b2)):
-        tmp = f"{work}/{name}_dir"
-        df.coalesce(1).write.parquet(tmp)
-        import glob as _glob
-        import shutil as _shutil
-
-        [part] = _glob.glob(f"{tmp}/part-*.parquet")
-        _shutil.move(part, f"{src}/{name}.parquet")
-    now = os.path.getmtime(f"{src}/e1.parquet")
-    os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-    os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-    raw = (
-        spark.readStream.schema(ddl)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    raw = staged_two_batch(spark, events, "event_id", 3, ddl, work)
     committed = run_stream_committed(
         streaming_cep_matches(raw, 3_600_000_000), work, "append",
         CEP_OUT_SCHEMA,
@@ -222,33 +207,25 @@ def test_streaming_cep_quantified_run_straddles_boundary(spark, tmp_path):
     # right quantifier length (b_len=5) — the fixed last-2-events
     # matcher structurally cannot. Also pins skip-past-last-row: a
     # second purchase right after reports no second match.
-    import os
-
     from pyspark.sql import functions as F
 
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
         run_stream_committed,
     )
+    from kafka_streams_aggregate_spark.sources.tables import staged_two_batch
     from kafka_streams_aggregate_spark.streaming.cep_stream import (
         CEPQ_OUT_SCHEMA,
         streaming_cep_quantified,
     )
 
     work = str(tmp_path)
-    src = f"{work}/src"
-    os.makedirs(src)
     ddl = "event_id long, user_id long, event_type string, ts_us long"
-    b1 = spark.createDataFrame(
+    events = spark.createDataFrame(
         [
             (1, 7, "view", 1_000_000),
             (2, 7, "click", 2_000_000),
             (3, 7, "click", 3_000_000),
-        ],
-        ddl,
-    )
-    b2 = spark.createDataFrame(
-        [
-            (4, 7, "click", 4_000_000),
+            (4, 7, "click", 4_000_000),  # micro-batch 2
             (5, 7, "click", 5_000_000),
             (6, 7, "click", 6_000_000),
             (7, 7, "purchase", 7_000_000),
@@ -256,23 +233,7 @@ def test_streaming_cep_quantified_run_straddles_boundary(spark, tmp_path):
         ],
         ddl,
     )
-    for name, df in (("e1", b1), ("e2", b2)):
-        tmp = f"{work}/{name}_dir"
-        df.coalesce(1).write.parquet(tmp)
-        import glob as _glob
-        import shutil as _shutil
-
-        [part] = _glob.glob(f"{tmp}/part-*.parquet")
-        _shutil.move(part, f"{src}/{name}.parquet")
-    now = os.path.getmtime(f"{src}/e1.parquet")
-    os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-    os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-    raw = (
-        spark.readStream.schema(ddl)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    raw = staged_two_batch(spark, events, "event_id", 4, ddl, work)
     committed = run_stream_committed(
         streaming_cep_quantified(raw, 3_600_000_000), work, "append",
         CEPQ_OUT_SCHEMA,
@@ -297,46 +258,26 @@ def test_streaming_session_spans_batch_boundary(spark, tmp_path):
     # (only the 30-min gap closes a session, never a batch boundary),
     # and a >30-min gap inside batch 2 opens a second one. The update
     # changelog's latest batch carries the running totals.
-    import os
-
     from pyspark.sql import functions as F
 
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
         run_stream_committed,
     )
+    from kafka_streams_aggregate_spark.sources.tables import staged_two_batch
     from kafka_streams_aggregate_spark.streaming.session_stream import (
         SESSION_OUT_SCHEMA,
         streaming_sessionize,
     )
 
     work = str(tmp_path)
-    src = f"{work}/src"
-    os.makedirs(src)
     ddl = "event_id long, user_id long, ts_us long"
     m = 60_000_000  # one minute in us
-    b1 = spark.createDataFrame(
-        [(1, 7, 0 * m), (2, 7, 10 * m)], ddl
+    events = spark.createDataFrame(
+        [(1, 7, 0 * m), (2, 7, 10 * m), (3, 7, 20 * m), (4, 7, 60 * m),
+         (5, 7, 65 * m)],
+        ddl,
     )
-    b2 = spark.createDataFrame(
-        [(3, 7, 20 * m), (4, 7, 60 * m), (5, 7, 65 * m)], ddl
-    )
-    for name, df in (("e1", b1), ("e2", b2)):
-        tmp = f"{work}/{name}_dir"
-        df.coalesce(1).write.parquet(tmp)
-        import glob as _glob
-        import shutil as _shutil
-
-        [part] = _glob.glob(f"{tmp}/part-*.parquet")
-        _shutil.move(part, f"{src}/{name}.parquet")
-    now = os.path.getmtime(f"{src}/e1.parquet")
-    os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-    os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-    raw = (
-        spark.readStream.schema(ddl)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    raw = staged_two_batch(spark, events, "event_id", 3, ddl, work)
     committed = run_stream_committed(
         streaming_sessionize(raw, 1800), work, "update", SESSION_OUT_SCHEMA
     )

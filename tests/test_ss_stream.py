@@ -18,28 +18,29 @@ CUT_DAY = 9300  # ~mid-1995: splits the shipdate range
 
 
 def test_ss_stream_parity_sf0001(spark):
-    import glob
-    import os
     import shutil
     import tempfile
 
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from kafka_streams_aggregate_spark.operators.inventory_fold import (
+        latest_per_key,
+    )
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
         run_stream_committed,
     )
-    from kafka_streams_aggregate_spark.sources.tables import load_table
+    from kafka_streams_aggregate_spark.sources.tables import (
+        load_table,
+        staged_two_batch,
+    )
     from kafka_streams_aggregate_spark.streaming.ss_stream import (
         SS_OUT_SCHEMA,
         streaming_ss_policy,
     )
 
     work = tempfile.mkdtemp(prefix="ksa_ssstream_")
-    src = f"{work}/src"
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        os.makedirs(src)
         daily = (
             load_table(spark, "lineitem", SF)
             .select(
@@ -55,36 +56,17 @@ def test_ss_stream_parity_sf0001(spark):
             .groupBy("product", "d")
             .agg(F.sum(F.col("qty").cast("bigint")).cast("bigint").alias("qty"))
         )
-        for name, pred in (
-            ("e1", F.col("d") < CUT_DAY),
-            ("e2", F.col("d") >= CUT_DAY),
-        ):
-            tmp = f"{work}/{name}_dir"
-            daily.filter(pred).coalesce(1).write.parquet(tmp)
-            [part] = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{src}/{name}.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = (
-            spark.readStream.schema("product long, d long, qty long")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        raw = staged_two_batch(
+            spark, daily, "d", CUT_DAY, "product long, d long, qty long", work
         )
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         committed = run_stream_committed(
             streaming_ss_policy(raw), work, "update", SS_OUT_SCHEMA
         )
-        w = Window.partitionBy("product").orderBy(F.col("_batch").desc())
-        got_df = (
-            committed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                "product", "n_days", "lost_sales", "n_orders", "end_on_hand"
-            )
-            .localCheckpoint(eager=True)
-        )
+        got_df = latest_per_key(
+            committed, ["product"], "_batch",
+            ["n_days", "lost_sales", "n_orders", "end_on_hand"],
+        ).localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         shutil.rmtree(work, ignore_errors=True)

@@ -18,11 +18,11 @@ from kafka_streams_aggregate_spark.operators.inventory_fold import (
     python_fold_oracle,
 )
 from kafka_streams_aggregate_spark.schemas import INVENTORY_UPDATE_FLAT_SCHEMA
-from kafka_streams_aggregate_spark.streaming import inventory_stream
+from kafka_streams_aggregate_spark.streaming import keyed_fold
 from kafka_streams_aggregate_spark.streaming.inventory_stream import (
-    key_bucket,
     streaming_inventory_fold,
 )
+from kafka_streams_aggregate_spark.streaming.keyed_fold import key_bucket
 from kafka_streams_aggregate_spark.streaming.pipeline import (
     count_event_output,
     parse_update_records,
@@ -249,29 +249,58 @@ def test_many_keys_per_bucket_parity_across_batches(spark, tmp_path, strict):
     assert len(oracle) > 250
 
 
-def test_bucket_count_change_is_refused(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("fold", ["inventory", "cusum"])
+def test_bucket_count_change_is_refused(spark, tmp_path, monkeypatch, fold):
     """A checkpoint is tied to the bucket count it was written under:
     restarting it with another ``N_BUCKETS`` would fold moved keys from
-    0 and strand their old counts, so the state function refuses it.
-    (Spark cannot catch this itself: the state key is an int either
-    way.)"""
-    keys = spark.createDataFrame([(f"k{i}",) for i in range(50)], "k string")
+    their initial state and strand their old state, so ``keyed_fold``'s
+    state function refuses it, whichever fold runs on it. (Spark cannot
+    catch this itself: the state key is an int either way.)"""
+    from kafka_streams_aggregate_spark.streaming.cusum_stream import (
+        streaming_cusum,
+    )
+
+    if fold == "inventory":
+        ddl, build = INVENTORY_UPDATE_FLAT_SCHEMA, streaming_inventory_fold
+        keys = spark.createDataFrame([(f"k{i}",) for i in range(50)], "k string")
+    else:
+        ddl = "event_id long, user_id long, ts_us long, value double"
+        build = streaming_cusum
+        keys = spark.range(50).withColumnRenamed("id", "k")
     # A key in bucket b < 16 is in bucket b under 16 buckets too, so the
     # second run reads the state row the first one wrote.
     key = next(
         r["k"] for r in keys.select("k", key_bucket("k").alias("b")).collect()
         if r["b"] < 16
     )
+    if fold == "inventory":
+        batches = [(key, 1, "INC", 5)], [(key, 2, "INC", 1)]
+        first_out = (key, 5)
+    else:
+        batches = [(1, key, 1, 1.0)], [(2, key, 2, 1.0)]
+        first_out = (key, 1, 0, 0, 0)
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    _write_round(spark, src, [(key, 1, "INC", 5)], "overwrite")
-    c1 = []
-    _run_stream(spark, src, ckpt, c1)
-    assert _latest_counts(c1) == {key: 5}
 
-    monkeypatch.setattr(inventory_stream, "N_BUCKETS", 16)
-    _write_round(spark, src, [(key, 2, "INC", 1)], "append")
+    def run(rows, mode):
+        spark.createDataFrame(rows, ddl).coalesce(1).write.mode(mode).parquet(src)
+        out = []
+        q = (
+            build(spark.readStream.schema(ddl).parquet(src))
+            .writeStream.foreachBatch(lambda df, _bid: out.extend(df.collect()))
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        return out
+
+    first = run(batches[0], "overwrite")
+    assert [tuple(r) for r in first] == [first_out]
+
+    monkeypatch.setattr(keyed_fold, "N_BUCKETS", 16)
     with pytest.raises(Exception, match="written under 64 key buckets"):
-        _run_stream(spark, src, ckpt, [])
+        run(batches[1], "append")
 
 
 def test_strict_tombstone_batch_stream_parity(spark, tmp_path):

@@ -61,32 +61,15 @@ def main() -> None:
         spark.range(32).repartition(32).mapInPandas(
             lambda it: it, "id long"
         ).count()
-        import shutil
-        import tempfile
-
         from kafka_streams_aggregate_spark.sources.eventlog_source import (
+            drain_workdir,
             run_stream_committed,
         )
 
-        warm = tempfile.mkdtemp(prefix="ksa_bench_warm_")
-        try:
+        with drain_workdir(spark) as warm:
             spark.range(8).write.parquet(f"{warm}/src")
             tiny = spark.readStream.schema("id long").parquet(f"{warm}/src")
             run_stream_committed(tiny, warm, "append", "id bigint").count()
-        finally:
-            shutil.rmtree(warm, ignore_errors=True)
-        # ... and the Python-DataSource sink path, still the declared
-        # surface of q_sink_exactly_once (r17: other streaming queries
-        # drain through the foreachBatch JVM path warmed above).
-        warm = tempfile.mkdtemp(prefix="ksa_bench_warm2_")
-        try:
-            spark.range(8).write.parquet(f"{warm}/src")
-            tiny = spark.readStream.schema("id long").parquet(f"{warm}/src")
-            run_stream_committed(
-                tiny, warm, "append", "id bigint", append_via="datasource"
-            ).count()
-        finally:
-            shutil.rmtree(warm, ignore_errors=True)
     except Exception:
         pass
 

@@ -31,22 +31,15 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def inventory_count_fold(
-    updates: DataFrame,
-    key_col: str = "product_code",
-    seq_col: str = "seq",
-    action_col: str = "action",
-    delta_col: str = "delta",
-    count_name: str = "count",
-    strict: bool = False,
-) -> DataFrame:
+def inventory_count_fold(updates: DataFrame, strict: bool = False) -> DataFrame:
     """Batch closed form of the keyed INC/DEC/REP fold.
 
-    Input: one row per update event ``(key, seq, action, delta)``;
-    ``seq`` defines fold order within a key (the Kafka offset stand-in).
-    Output: one row per key ``(key, count)`` — the final aggregate, i.e.
-    the latest row of the reference's KTable ``inventory-counts``
-    (``KafkaStreamsInventoryCountApplication.java:78-82``).
+    Input: one row per update event ``(product_code, seq, action,
+    delta)``; ``seq`` defines fold order within a key (the Kafka offset
+    stand-in). Output: one row per key ``(product_code, count)`` — the
+    final aggregate, i.e. the latest row of the reference's KTable
+    ``inventory-counts`` (``KafkaStreamsInventoryCountApplication.java:
+    78-82``).
 
     Rows with null ``delta`` or null ``action`` are dropped, mirroring
     the null-value-record skip rule.
@@ -60,18 +53,13 @@ def inventory_count_fold(
     unknown actions are ignored — the practical batch reading, since the
     reference's enum makes them unreachable.
     """
-    key, seq, action, delta = (
-        F.col(key_col),
-        F.col(seq_col),
-        F.col(action_col),
-        F.col(delta_col),
-    )
+    seq, action, delta = F.col("seq"), F.col("action"), F.col("delta")
 
     non_null = updates.filter(delta.isNotNull() & action.isNotNull())
     if strict:
         # Same key partitioning as the fold windows below: no extra
         # exchange — Catalyst reuses the hash partitioning.
-        wk = Window.partitionBy(key_col)
+        wk = Window.partitionBy("product_code")
         last_poison = F.max(
             F.when(~action.isin("INC", "DEC", "REP"), seq)
         ).over(wk)
@@ -82,7 +70,7 @@ def inventory_count_fold(
         )
     valid = non_null.filter(action.isin("INC", "DEC", "REP"))
 
-    w = Window.partitionBy(key_col)
+    w = Window.partitionBy("product_code")
     last_rep_seq: Column = F.max(F.when(action == "REP", seq)).over(w)
 
     with_rep = valid.withColumn("_last_rep_seq", last_rep_seq)
@@ -93,7 +81,7 @@ def inventory_count_fold(
     )
 
     return (
-        with_rep.groupBy(key_col)
+        with_rep.groupBy("product_code")
         .agg(
             (
                 F.coalesce(
@@ -102,7 +90,7 @@ def inventory_count_fold(
                 + F.coalesce(
                     F.sum(F.when(after_rep, signed)).cast("long"), F.lit(0)
                 )
-            ).alias(count_name)
+            ).alias("count")
         )
     )
 

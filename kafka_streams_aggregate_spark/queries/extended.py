@@ -24,9 +24,15 @@ from kafka_streams_aggregate_spark.functions.money import (
 )
 from kafka_streams_aggregate_spark.operators.inventory_fold import latest_per_key
 from kafka_streams_aggregate_spark.registry import register
+from kafka_streams_aggregate_spark.sources.eventlog_source import (
+    drain_workdir,
+    run_stream_committed,
+)
 from kafka_streams_aggregate_spark.sources.tables import (
     load_table,
+    stage_files,
     staged_two_batch,
+    stream_events,
 )
 
 # Exact-decimal revenue term shared by the TPC-H shapes.
@@ -709,18 +715,8 @@ def q_embed_centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "streaming-window", "topk"),
 )
 def q_stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.tables import stream_events
-
-    work = tempfile.mkdtemp(prefix="ksa_trending_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with drain_workdir(spark) as work:
+        src = stage_files(work, [f"{sf_dir}/events.parquet"])
         raw = stream_events(spark, src, ("ts", "event_type"))
         agg = (
             raw.withWatermark("ts", "0 seconds")
@@ -730,10 +726,6 @@ def q_stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("window.start").alias("window_start"), "event_type", "n"
             )
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
-
         out = run_stream_committed(
             agg, work, "append",
             "window_start timestamp, event_type string, n bigint",
@@ -746,9 +738,6 @@ def q_stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rank") <= 3)
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --- TPC-H Q2/Q9/Q11/Q12/Q16/Q20 (adapted: no partsupp table in the ----
@@ -1734,20 +1723,12 @@ def q_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("cep", "streaming", "stateful"),
 )
 def q_cep_pattern_match_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
     from kafka_streams_aggregate_spark.streaming.cep_stream import (
         CEP_OUT_SCHEMA,
         streaming_cep_matches,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_cepstream_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with drain_workdir(spark) as work:
         # Two time-split files (maxFilesPerTrigger=1, mtime order) give
         # per-user event-time order ACROSS batches — the ingest property
         # the cross-batch state carry depends on.
@@ -1761,7 +1742,6 @@ def q_cep_pattern_match_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, base, "ts_us", 1705363200000000,  # 2024-01-16 UTC
             "event_id long, user_id long, event_type string, ts_us long", work,
         )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         matches = streaming_cep_matches(raw, _CEP_WINDOW_US)
         committed = run_stream_committed(
             matches, work, "append", CEP_OUT_SCHEMA
@@ -1775,9 +1755,6 @@ def q_cep_pattern_match_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -2060,20 +2037,12 @@ def q_cep_quantified(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("cep", "streaming", "stateful"),
 )
 def q_cep_quantified_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
     from kafka_streams_aggregate_spark.streaming.cep_stream import (
         CEPQ_OUT_SCHEMA,
         streaming_cep_quantified,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_cepqstream_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with drain_workdir(spark) as work:
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "user_id",
@@ -2084,7 +2053,6 @@ def q_cep_quantified_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, base, "ts_us", 1705363200000000,  # 2024-01-16 UTC
             "event_id long, user_id long, event_type string, ts_us long", work,
         )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         matches = streaming_cep_quantified(raw, _CEP_WINDOW_US)
         committed = run_stream_committed(
             matches, work, "append", CEPQ_OUT_SCHEMA
@@ -2100,9 +2068,6 @@ def q_cep_quantified_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2154,20 +2119,12 @@ def q_cep_quantified_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sessionize", "streaming", "stateful"),
 )
 def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
     from kafka_streams_aggregate_spark.streaming.session_stream import (
         SESSION_OUT_SCHEMA,
         streaming_sessionize,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_sessstream_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with drain_workdir(spark) as work:
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "user_id",
@@ -2177,7 +2134,6 @@ def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, base, "ts_us", 1705363200000000,  # 2024-01-16 UTC
             "event_id long, user_id long, ts_us long", work,
         )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         committed = run_stream_committed(
             streaming_sessionize(raw, 1800), work, "update",
             SESSION_OUT_SCHEMA,
@@ -2186,9 +2142,6 @@ def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             committed, ["user_id"], "_batch",
             ["n_sessions", "n_events", "max_session_events"],
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -2699,20 +2652,12 @@ def q_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sessionize", "streaming", "stateful", "ttl"),
 )
 def q_sessionize_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
     from kafka_streams_aggregate_spark.streaming.session_stream import (
         SESSION_TTL_OUT_SCHEMA,
         streaming_sessionize_ttl,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_sessttl_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with drain_workdir(spark) as work:
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "user_id",
@@ -2726,7 +2671,6 @@ def q_sessionize_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("ts", F.timestamp_micros("ts_us"))
             .withWatermark("ts", "0 seconds")
         )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         committed = run_stream_committed(
             streaming_sessionize_ttl(raw, 1800), work, "append",
             SESSION_TTL_OUT_SCHEMA,
@@ -2744,9 +2688,6 @@ def q_sessionize_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -3266,20 +3207,12 @@ def q_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "timeseries", "stateful-fold"),
 )
 def q_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
     from kafka_streams_aggregate_spark.streaming.ewma_stream import (
         EWMA_OUT_SCHEMA,
         streaming_ewma,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_ewmastream_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with drain_workdir(spark) as work:
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "user_id",
@@ -3290,16 +3223,12 @@ def q_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, base, "ts_us", 1705363200000000,  # 2024-01-16 UTC
             "event_id long, user_id long, ts_us long, value double", work,
         )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         committed = run_stream_committed(
             streaming_ewma(raw), work, "update", EWMA_OUT_SCHEMA
         )
         return latest_per_key(
             committed, ["user_id"], "_batch", ["n_events", "ewma_last"]
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(

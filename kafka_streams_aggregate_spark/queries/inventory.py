@@ -10,7 +10,7 @@ DuckDB rounds on double->int casts, so the query pins the semantics).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_aggregate_spark.operators.inventory_fold import (
@@ -18,7 +18,15 @@ from kafka_streams_aggregate_spark.operators.inventory_fold import (
     latest_per_key,
 )
 from kafka_streams_aggregate_spark.registry import register
-from kafka_streams_aggregate_spark.sources.tables import load_table, stream_events
+from kafka_streams_aggregate_spark.sources.eventlog_source import (
+    drain_workdir,
+    run_stream_committed,
+)
+from kafka_streams_aggregate_spark.sources.tables import (
+    load_table,
+    stage_files,
+    stream_events,
+)
 
 ACTION_MAP_SQL = """
     CASE event_type
@@ -29,10 +37,12 @@ ACTION_MAP_SQL = """
 """
 
 
-def _mapped_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, "events", sf_dir)
+def _updates(events: DataFrame, key: Column) -> DataFrame:
+    """The declared event -> update mapping (module doc), with ``key``
+    as the product code: the batch fold keeps ``user_id``'s type, the
+    streaming fold takes it as a string."""
     return events.select(
-        F.col("user_id").alias("product_code"),
+        key.alias("product_code"),
         F.col("event_id").alias("seq"),
         F.when(F.col("event_type") == "purchase", "INC")
         .when(F.col("event_type") == "error", "DEC")
@@ -74,7 +84,8 @@ def _mapped_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reference", "stateful-agg"),
 )
 def q_agg_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return inventory_count_fold(_mapped_updates(spark, sf_dir))
+    events = load_table(spark, "events", sf_dir)
+    return inventory_count_fold(_updates(events, F.col("user_id")))
 
 
 @register(
@@ -143,43 +154,20 @@ def q_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reference", "stateful-agg", "streaming"),
 )
 def q_agg_inventory_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.streaming.inventory_stream import (
         streaming_inventory_fold,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_stream_")
-    src = f"{work}/src"
-    # Stateful-query partitioning is pinned at checkpoint creation; the
-    # key cardinality here (~1.5k at sf0.1) doesn't justify 32 state
-    # stores + 32 Python workers per micro-batch, so pin a smaller
-    # count for this fresh-checkpoint run and restore afterwards.
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
+    with drain_workdir(spark) as work:
+        src = stage_files(work, [f"{sf_dir}/events.parquet"])
         raw = (
             spark.readStream.schema(
                 "event_id long, user_id long, event_type string, value double"
             ).parquet(src)
         )
-        updates = raw.select(
-            F.col("user_id").cast("string").alias("product_code"),
-            F.col("event_id").alias("seq"),
-            F.when(F.col("event_type") == "purchase", "INC")
-            .when(F.col("event_type") == "error", "DEC")
-            .when(F.col("event_type") == "signup", "REP")
-            .alias("action"),
-            F.floor("value").cast("int").alias("delta"),
+        folded = streaming_inventory_fold(
+            _updates(raw, F.col("user_id").cast("string"))
         )
-        folded = streaming_inventory_fold(updates)
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
-
         committed = run_stream_committed(
             folded, work, "update", "product_code string, count bigint"
         )
@@ -188,9 +176,6 @@ def q_agg_inventory_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         return latest_per_key(
             committed, ["product_code"], "_batch", ["count"]
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -216,16 +201,8 @@ def q_agg_inventory_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reference", "streaming", "streaming-window"),
 )
 def q_tumbling_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_winstream_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with drain_workdir(spark) as work:
+        src = stage_files(work, [f"{sf_dir}/events.parquet"])
         raw = stream_events(spark, src, ("ts", "event_type"))
         agg = (
             raw.withWatermark("ts", "0 seconds")
@@ -235,17 +212,10 @@ def q_tumbling_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("window.start").alias("window_start"), "event_type", "n"
             )
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
-
         return run_stream_committed(
             agg, work, "append",
             "window_start timestamp, event_type string, n bigint",
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -277,16 +247,8 @@ def q_tumbling_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "streaming-window"),
 )
 def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_ssjoin_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with drain_workdir(spark) as work:
+        src = stage_files(work, [f"{sf_dir}/events.parquet"])
         raw = stream_events(spark, src, ("ts", "user_id", "value"))
         cust = load_table(spark, "customer", sf_dir).select(
             "c_custkey", "c_nationkey"
@@ -312,18 +274,11 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_units",
             )
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
-
         return run_stream_committed(
             agg, work, "append",
             "window_start timestamp, n_name string, n_events bigint, "
             "total_units bigint",
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -354,16 +309,8 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "stream-stream"),
 )
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_ssjn_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with drain_workdir(spark) as work:
+        src = stage_files(work, [f"{sf_dir}/events.parquet"])
         raw = stream_events(spark, src, ("event_id", "ts", "user_id", "event_type"))
         clicks = (
             raw.filter(F.col("event_type") == "click")
@@ -400,18 +347,11 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("gap_seconds"),
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
-
         return run_stream_committed(
             joined, work, "append",
             "click_id bigint, purchase_id bigint, user_id bigint, "
             "gap_seconds bigint",
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -501,17 +441,8 @@ def q_agg_inventory_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup", "streaming-window", "watermark"),
 )
 def q_stream_dedup_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_sdedup_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/e1.parquet")
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/e2.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with drain_workdir(spark) as work:
+        src = stage_files(work, [f"{sf_dir}/events.parquet"] * 2)
         raw = stream_events(spark, src, ("event_id", "ts", "event_type"))
         deduped = raw.withWatermark("ts", "7 days").dropDuplicatesWithinWatermark(
             ["event_id"]
@@ -523,17 +454,10 @@ def q_stream_dedup_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("window.start").alias("window_start"), "event_type", "n"
             )
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
-
         return run_stream_committed(
             agg, work, "append",
             "window_start timestamp, event_type string, n bigint",
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -577,9 +501,6 @@ def q_stream_dedup_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reference", "source", "streaming", "stateful-agg"),
 )
 def q_custom_source_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
         register_eventlog_source,
     )
@@ -588,38 +509,21 @@ def q_custom_source_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_eventlog_source(spark)
-    work = tempfile.mkdtemp(prefix="ksa_evsrc_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with drain_workdir(spark) as work:
         raw = (
             spark.readStream.format("eventlog")
             .option("path", f"{sf_dir}/events.parquet")
             .load()
         )
-        updates = raw.select(
-            F.col("user_id").cast("string").alias("product_code"),
-            F.col("event_id").alias("seq"),
-            F.when(F.col("event_type") == "purchase", "INC")
-            .when(F.col("event_type") == "error", "DEC")
-            .when(F.col("event_type") == "signup", "REP")
-            .alias("action"),
-            F.floor("value").cast("int").alias("delta"),
+        folded = streaming_inventory_fold(
+            _updates(raw, F.col("user_id").cast("string"))
         )
-        folded = streaming_inventory_fold(updates)
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
-
         committed = run_stream_committed(
             folded, work, "update", "product_code string, count bigint"
         )
         return latest_per_key(
             committed, ["product_code"], "_batch", ["count"]
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -655,40 +559,15 @@ def q_custom_source_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "cdc", "merge", "sink"),
 )
 def q_cdc_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.operators.cdc_merge import merge_cdc_stream
-    from kafka_streams_aggregate_spark.sources.tables import stream_events
 
-    work = tempfile.mkdtemp(prefix="ksa_cdcmerge_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
+    with drain_workdir(spark) as work:
         # Two source files -> with maxFilesPerTrigger=1, two micro-batches
         # whose key sets overlap: the second batch MUST merge against the
         # first's committed buckets for the result to be right.
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/e1.parquet")
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/e2.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        raw = stream_events(
-            spark, src, ("event_id", "user_id", "value"),
-            options={"maxFilesPerTrigger": "1"},
-        )
-        changes = raw.select(
-            "user_id",
-            F.col("event_id").alias("seq"),
-            F.when(
-                F.pmod(F.floor(F.col("value") * 10).cast("bigint"), F.lit(7)) == 0,
-                F.lit("D"),
-            )
-            .otherwise(F.lit("U"))
-            .alias("op"),
-            "value",
-        )
+        src = stage_files(work, [f"{sf_dir}/events.parquet"] * 2)
         snap = merge_cdc_stream(
-            changes, work,
+            _tag_cdc_stream(spark, src), work,
             key_col="user_id", seq_col="seq", op_col="op",
             value_cols=("value",), n_buckets=16,
         )
@@ -701,9 +580,6 @@ def q_cdc_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _stage_two_batch_log(spark: SparkSession, sf_dir: str, work: str) -> str:
@@ -712,17 +588,7 @@ def _stage_two_batch_log(spark: SparkSession, sf_dir: str, work: str) -> str:
     seq offset +2e9, value +1000) whose LATER mtime makes an
     oldest-first file stream read it second. The staged directory IS
     the durable changelog — replay consumers re-read it from offset 0."""
-    import glob
-    import os
-    import shutil
-
-    from kafka_streams_aggregate_spark.sources.tables import load_table
-
-    src = f"{work}/src"
-    os.makedirs(src)
-    shutil.copy(f"{sf_dir}/events.parquet", f"{src}/e1.parquet")
-    corr_dir = f"{work}/corr"
-    (
+    corr = (
         load_table(spark, "events", sf_dir)
         .filter(F.col("user_id") < 50)
         .select(
@@ -730,15 +596,8 @@ def _stage_two_batch_log(spark: SparkSession, sf_dir: str, work: str) -> str:
             "user_id",
             (F.col("value") + 1000.0).alias("value"),
         )
-        .coalesce(1)
-        .write.parquet(corr_dir)
     )
-    [part] = glob.glob(f"{corr_dir}/part-*.parquet")
-    shutil.move(part, f"{src}/e2.parquet")
-    now = os.path.getmtime(f"{src}/e1.parquet")
-    os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-    os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-    return src
+    return stage_files(work, [f"{sf_dir}/events.parquet", corr])
 
 
 def _tag_cdc_stream(spark: SparkSession, src: str, options=None):
@@ -747,7 +606,6 @@ def _tag_cdc_stream(spark: SparkSession, src: str, options=None):
     diverging on them would silently de-sync their oracles.
     ``options`` defaults to one-file-per-micro-batch; pass ``{}`` to
     consume the whole log in a single batch (replay/backfill path)."""
-    from kafka_streams_aggregate_spark.sources.tables import stream_events
 
     raw = stream_events(
         spark, src, ("event_id", "user_id", "value"),
@@ -837,20 +695,14 @@ def _two_batch_cdc_source(spark: SparkSession, sf_dir: str, work: str):
     tags=("streaming", "cdc", "time-travel", "lakehouse"),
 )
 def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.operators.cdc_merge import (
         manifest_versions,
         merge_cdc_stream,
         read_snapshot_as_of,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_timetravel_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with drain_workdir(spark) as work:
         changes = _two_batch_cdc_source(spark, sf_dir, work)
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         latest = merge_cdc_stream(
             changes, work,
             key_col="user_id", seq_col="seq", op_col="op",
@@ -885,9 +737,6 @@ def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("changed"),
         )
         return diff.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -934,9 +783,6 @@ def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "cdc", "vacuum", "lakehouse"),
 )
 def q_cdc_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.operators.cdc_merge import (
         manifest_versions,
         merge_cdc_stream,
@@ -944,11 +790,8 @@ def q_cdc_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         vacuum_snapshots,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_vacuum_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with drain_workdir(spark) as work:
         changes = _two_batch_cdc_source(spark, sf_dir, work)
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         merge_cdc_stream(
             changes, work,
             key_col="user_id", seq_col="seq", op_col="op",
@@ -975,9 +818,6 @@ def q_cdc_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1079,19 +919,13 @@ def q_compacted_upsert_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("streaming", "cdc", "merge-on-read", "lakehouse"),
 )
 def q_cdc_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.operators.cdc_merge import (
         merge_cdc_stream_mor,
         read_mor_snapshot,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_cdcmor_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with drain_workdir(spark) as work:
         changes = _two_batch_cdc_source(spark, sf_dir, work)
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         out = merge_cdc_stream_mor(
             changes, work,
             key_col="user_id", seq_col="seq", op_col="op",
@@ -1113,9 +947,6 @@ def q_cdc_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1172,16 +1003,8 @@ def q_cdc_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "stream-stream", "outer"),
 )
 def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_ssjl_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with drain_workdir(spark) as work:
+        src = stage_files(work, [f"{sf_dir}/events.parquet"])
         raw = stream_events(spark, src, ("event_id", "ts", "user_id", "event_type"))
         clicks = (
             raw.filter(F.col("event_type") == "click")
@@ -1219,18 +1042,11 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("gap_seconds"),
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
-
         return run_stream_committed(
             joined, work, "append",
             "click_id bigint, purchase_id bigint, user_id bigint, "
             "gap_seconds bigint",
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1266,16 +1082,8 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "state-store", "ops"),
 )
 def q_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_ssread_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with drain_workdir(spark) as work:
+        src = stage_files(work, [f"{sf_dir}/events.parquet"])
         raw = stream_events(spark, src, ("event_id", "ts", "event_type"))
         agg = (
             raw.withWatermark("ts", "1 hour")
@@ -1306,9 +1114,6 @@ def q_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1363,24 +1168,13 @@ def q_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "cdc", "merge-on-read", "cdf"),
 )
 def q_cdc_mor_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.operators.cdc_merge import (
         merge_cdc_stream_mor,
         read_mor_changes,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_morcdf_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/e1.parquet")
-        corr_dir = f"{work}/corr"
-        (
+    with drain_workdir(spark) as work:
+        corr = (
             load_table(spark, "events", sf_dir)
             .filter(F.col("user_id") < 50)
             .select(
@@ -1392,32 +1186,9 @@ def q_cdc_mor_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("user_id"),
                 (F.col("value") + 1000.0).alias("value"),
             )
-            .coalesce(1)
-            .write.parquet(corr_dir)
         )
-        [part] = glob.glob(f"{corr_dir}/part-*.parquet")
-        shutil.move(part, f"{src}/e2.parquet")
-        now = os.path.getmtime(f"{src}/e1.parquet")
-        os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-        os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-
-        raw = stream_events(
-            spark, src, ("event_id", "user_id", "value"),
-            options={"maxFilesPerTrigger": "1"},
-        )
-        changes = raw.select(
-            "user_id",
-            F.col("event_id").alias("seq"),
-            F.when(
-                F.pmod(F.floor(F.col("value") * 10).cast("bigint"), F.lit(7))
-                == 0,
-                F.lit("D"),
-            )
-            .otherwise(F.lit("U"))
-            .alias("op"),
-            "value",
-        )
+        src = stage_files(work, [f"{sf_dir}/events.parquet", corr])
+        changes = _tag_cdc_stream(spark, src)
         out = merge_cdc_stream_mor(
             changes, work,
             key_col="user_id", seq_col="seq", op_col="op",
@@ -1429,9 +1200,6 @@ def q_cdc_mor_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             cdf.select("user_id", "seq", "value", "change_type")
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1470,16 +1238,8 @@ def q_cdc_mor_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "streaming-window", "hopping"),
 )
 def q_hopping_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_hopstream_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with drain_workdir(spark) as work:
+        src = stage_files(work, [f"{sf_dir}/events.parquet"])
         raw = stream_events(spark, src, ("ts", "event_type"))
         agg = (
             raw.withWatermark("ts", "0 seconds")
@@ -1489,17 +1249,10 @@ def q_hopping_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("window.start").alias("window_start"), "event_type", "n"
             )
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
-
         return run_stream_committed(
             agg, work, "append",
             "window_start timestamp, event_type string, n bigint",
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1550,16 +1303,8 @@ def q_hopping_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "session-window", "streaming-window"),
 )
 def q_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_sessnat_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with drain_workdir(spark) as work:
+        src = stage_files(work, [f"{sf_dir}/events.parquet"])
         raw = stream_events(spark, src, ("event_id", "ts", "user_id"))
         agg = (
             raw.withWatermark("ts", "0 seconds")
@@ -1572,18 +1317,11 @@ def q_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_events",
             )
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
-
         return run_stream_committed(
             agg, work, "append",
             "session_start timestamp, session_end timestamp, "
             "user_id bigint, n_events bigint",
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1640,16 +1378,8 @@ def q_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "stream-stream", "outer"),
 )
 def q_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="ksa_ssjf_")
-    src = f"{work}/src"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        shutil.os.makedirs(src)
-        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with drain_workdir(spark) as work:
+        src = stage_files(work, [f"{sf_dir}/events.parquet"])
         raw = stream_events(spark, src, ("event_id", "ts", "user_id", "event_type"))
         clicks = (
             raw.filter(F.col("event_type") == "click")
@@ -1681,17 +1411,10 @@ def q_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "purchase_id",
             F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
         )
-        from kafka_streams_aggregate_spark.sources.eventlog_source import (
-            run_stream_committed,
-        )
-
         return run_stream_committed(
             joined, work, "append",
             "click_id bigint, purchase_id bigint, user_id bigint",
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1861,18 +1584,12 @@ def q_fifo_cost_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "cdc", "replay", "kappa", "lakehouse"),
 )
 def q_cdc_replay_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from kafka_streams_aggregate_spark.operators.cdc_merge import (
         merge_cdc_stream_mor,
         read_mor_snapshot,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_replay_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with drain_workdir(spark) as work:
         ddl = "user_id bigint, seq bigint, op string, value double"
         log_dir = _stage_two_batch_log(spark, sf_dir, work)
 
@@ -1919,9 +1636,6 @@ def q_cdc_replay_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "replay_delta_batches"
             ),
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------

@@ -21,6 +21,10 @@ from pyspark.sql import functions as F
 
 from kafka_streams_aggregate_spark.operators.inventory_fold import latest_per_key
 from kafka_streams_aggregate_spark.registry import register
+from kafka_streams_aggregate_spark.sources.eventlog_source import (
+    drain_workdir,
+    run_stream_committed,
+)
 from kafka_streams_aggregate_spark.sources.tables import (
     load_table,
     staged_two_batch,
@@ -2460,20 +2464,12 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "changepoint", "stateful-fold"),
 )
 def q_cusum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
     from kafka_streams_aggregate_spark.streaming.cusum_stream import (
         CUSUM_OUT_SCHEMA,
         streaming_cusum,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_cusumstream_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with drain_workdir(spark) as work:
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "user_id",
@@ -2484,7 +2480,6 @@ def q_cusum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, base, "ts_us", 1705363200000000,
             "event_id long, user_id long, ts_us long, value double", work,
         )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         committed = run_stream_committed(
             streaming_cusum(raw), work, "update", CUSUM_OUT_SCHEMA
         )
@@ -2492,9 +2487,6 @@ def q_cusum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             committed, ["user_id"], "_batch",
             ["n_events", "cusum_last", "cusum_max", "n_alarms"],
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2564,20 +2556,12 @@ def q_cusum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "inventory", "policy", "stateful-fold"),
 )
 def q_ss_policy_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
     from kafka_streams_aggregate_spark.streaming.ss_stream import (
         SS_OUT_SCHEMA,
         streaming_ss_policy,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_ssstream_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with drain_workdir(spark) as work:
         daily = (
             _daily_demand(spark, sf_dir)
             .where(F.col("product") % 16 == 0)
@@ -2592,7 +2576,6 @@ def q_ss_policy_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw = staged_two_batch(
             spark, daily, "d", 9300, "product long, d long, qty long", work
         )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         committed = run_stream_committed(
             streaming_ss_policy(raw), work, "update", SS_OUT_SCHEMA
         )
@@ -2600,9 +2583,6 @@ def q_ss_policy_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             committed, ["product"], "_batch",
             ["n_days", "lost_sales", "n_orders", "end_on_hand"],
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------

@@ -22,7 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_aggregate_spark.registry import register
-from kafka_streams_aggregate_spark.sources.tables import load_table
+from kafka_streams_aggregate_spark.sources.eventlog_source import (
+    _await_drained,
+    drain_workdir,
+)
+from kafka_streams_aggregate_spark.sources.tables import load_table, stage_files
 
 # The TVD cut timestamp (2024-01-16 UTC) — shared with q_source_token_tvd
 # and the CUPED pre/post split; events.ts is a true TIMESTAMP so
@@ -242,11 +246,7 @@ def q_lin_ccc(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_rocksdb_changelog_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
-    import shutil
-    import tempfile
 
-    work = tempfile.mkdtemp(prefix="ksa_rocksdb_clog_")
-    src, ckpt = f"{work}/src", f"{work}/ckpt"
     confs = {
         "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state."
@@ -254,13 +254,9 @@ def q_rocksdb_changelog_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.streaming.stateStore.rocksdb."
         "changelogCheckpointing.enabled": "true",
     }
-    # Pin a modest state-partition count for the drain: the vanilla
-    # driver session defaults to 200 shuffle partitions, which would
-    # make every microbatch a 200-task state stage over this
-    # events-sized input (the q_state_store_read precedent).
-    confs["spark.sql.shuffle.partitions"] = "16"
     old = {k: spark.conf.get(k, None) for k in confs}
-    try:
+    with drain_workdir(spark) as work:
+        src, ckpt = f"{work}/src", f"{work}/ckpt"
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "event_type",
@@ -284,31 +280,31 @@ def q_rocksdb_changelog_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(300)
+            _await_drained(q, 300)
 
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        base.where("event_id % 2 = 0").write.parquet(src)
-        drain()
-        changelogs = bool(
-            glob.glob(ckpt + "/state/**/*.changelog", recursive=True)
-        )
-        base.where("event_id % 2 = 1").write.mode("append").parquet(src)
-        drain()
-        state = spark.read.format("statestore").load(ckpt)
-        return (
-            state.select(
-                F.col("key.event_type").alias("event_type"),
-                F.col("value.count").cast("bigint").alias("n_events"),
-                F.col("value.sum").cast("bigint").alias("sum_cents"),
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            base.where("event_id % 2 = 0").write.parquet(src)
+            drain()
+            changelogs = bool(
+                glob.glob(ckpt + "/state/**/*.changelog", recursive=True)
             )
-            .withColumn("changelog_written", F.lit(changelogs))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        for k, v in old.items():
-            (spark.conf.set(k, v) if v is not None else spark.conf.unset(k))
-        shutil.rmtree(work, ignore_errors=True)
+            base.where("event_id % 2 = 1").write.mode("append").parquet(src)
+            drain()
+            state = spark.read.format("statestore").load(ckpt)
+            return (
+                state.select(
+                    F.col("key.event_type").alias("event_type"),
+                    F.col("value.count").cast("bigint").alias("n_events"),
+                    F.col("value.sum").cast("bigint").alias("sum_cents"),
+                )
+                .withColumn("changelog_written", F.lit(changelogs))
+                .localCheckpoint(eager=True)
+            )
+        finally:
+            for k, v in old.items():
+                (spark.conf.set(k, v) if v is not None else spark.conf.unset(k))
 
 
 @register(
@@ -2052,38 +2048,25 @@ def q_bucket_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "watermark", "engine-surface"),
 )
 def q_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import datetime
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import time as _time
+    def batch(values_sql):
+        # JVM-side SQL VALUES: a Python-rows frame re-runs the Python
+        # runner on every write action (~5.5 s per tiny file).
+        return spark.sql(f"SELECT * FROM (VALUES {values_sql}) AS t(ts, k)")
 
-    work = tempfile.mkdtemp(prefix="ksa_wm_drop_")
-    src, ckpt = f"{work}/src", f"{work}/ckpt"
-    os.makedirs(src)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
+    def t(m):
+        return f"TIMESTAMP'2024-01-01 12:{m:02d}:00'"
 
-        def write_file(name, rows):
-            stage = f"{work}/stage_{name}"
-            spark.createDataFrame(rows, "ts TIMESTAMP, k STRING").coalesce(
-                1
-            ).write.mode("overwrite").parquet(stage)
-            part = glob.glob(stage + "/part-*.parquet")[0]
-            # one file per micro-batch; mtime (plus name order as the
-            # tiebreak) sequences maxFilesPerTrigger=1
-            shutil.copy(part, os.path.join(src, name + ".parquet"))
-            _time.sleep(1.1)
-
-        def t(m):
-            return datetime.datetime(2024, 1, 1, 12, m)
-
-        write_file("b1", [(t(0), "a"), (t(1), "a")])
-        write_file("b2", [(t(30), "b")])  # raises max event time to 12:30
-        write_file("b3", [(t(29), "c")])  # filtered by the 11:51 watermark
-        write_file("b4", [(t(2), "late")])  # below 12:20 -> dropped
+    with drain_workdir(spark) as work:
+        ckpt = f"{work}/ckpt"
+        src = stage_files(
+            work,
+            [
+                batch(f"({t(0)}, 'a'), ({t(1)}, 'a')"),
+                batch(f"({t(30)}, 'b')"),  # raises max event time to 12:30
+                batch(f"({t(29)}, 'c')"),  # filtered by the 11:51 watermark
+                batch(f"({t(2)}, 'late')"),  # below 12:20 -> dropped
+            ],
+        )
         q = (
             spark.readStream.schema("ts TIMESTAMP, k STRING")
             .option("maxFilesPerTrigger", "1")
@@ -2097,7 +2080,7 @@ def q_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await_drained(q, 300)
         dropped = sum(
             op["numRowsDroppedByWatermark"]
             for p in q.recentProgress
@@ -2116,9 +2099,6 @@ def q_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------

@@ -22,6 +22,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_aggregate_spark.registry import register
+from kafka_streams_aggregate_spark.sources.eventlog_source import (
+    _await_drained,
+    drain_workdir,
+    read_eventlog_sink,
+    register_eventlog_sink,
+)
 from kafka_streams_aggregate_spark.sources.tables import load_table
 
 # Shared monthly-revenue rollup (cents, per nation) — the input both
@@ -1376,8 +1382,8 @@ def q_listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the last graduatable engine row, per the r14 verdict's item "
         "4 — the q_rocksdb_changelog_restore shape applied to the "
         "SINK side): half the events drain through the two-phase-"
-        "commit manifest sink (sources/eventlog_source.py:"
-        "run_stream_committed, append mode), the job stops, the other "
+        "commit manifest sink (sources/eventlog_source.py: the "
+        "eventlogsink Python DataSource), the job stops, the other "
         "half lands, and a SECOND availableNow drain resumes from the "
         "SAME checkpoint. The combined manifest read-back must hold "
         "every event exactly once: per-type counts/sums hash-match "
@@ -1391,17 +1397,10 @@ def q_listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "sink", "engine-surface", "fault-tolerance"),
 )
 def q_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
-
-    work = tempfile.mkdtemp(prefix="ksa_sink_eo_")
-    src = f"{work}/src"
     schema = "event_id BIGINT, event_type STRING, cents BIGINT"
-    try:
+    register_eventlog_sink(spark)
+    with drain_workdir(spark) as work:
+        src, out = f"{work}/src", f"{work}/sinkout"
         base = load_table(spark, "events", sf_dir).select(
             "event_id",
             "event_type",
@@ -1409,21 +1408,26 @@ def q_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         def drain():
-            stream = spark.readStream.schema(schema).parquet(src)
-            # append_via='datasource': the Python-DataSource stream
-            # sink's two-phase commit IS this query's declared engine
-            # surface (r17: every other streaming query drains through
-            # the foreachBatch JVM path — guide §4).
-            return run_stream_committed(
-                stream, work, "append", schema, append_via="datasource"
+            # The eventlogsink Python DataSource's two-phase commit IS
+            # this query's declared engine surface.
+            q = (
+                spark.readStream.schema(schema)
+                .parquet(src)
+                .writeStream.format("eventlogsink")
+                .option("path", out)
+                .option("checkpointLocation", f"{work}/sinkckpt")
+                .trigger(availableNow=True)
+                .start()
             )
+            _await_drained(q, 300)
 
         base.where("event_id % 2 = 0").write.parquet(src)
         drain()  # first drain commits manifests for the even half
         base.where("event_id % 2 = 1").write.mode("append").parquet(src)
-        combined = drain()  # same checkpoint: only the odd half is new
+        drain()  # same checkpoint: only the odd half is new
         return (
-            combined.groupBy("event_type")
+            read_eventlog_sink(spark, out, schema)
+            .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_events"),
                 F.sum("cents").cast("bigint").alias("sum_cents"),
@@ -1433,8 +1437,6 @@ def q_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------

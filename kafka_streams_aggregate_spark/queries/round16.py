@@ -20,7 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_streams_aggregate_spark.registry import register
-from kafka_streams_aggregate_spark.sources.tables import load_table
+from kafka_streams_aggregate_spark.sources.eventlog_source import (
+    _await_drained,
+    drain_workdir,
+)
+from kafka_streams_aggregate_spark.sources.tables import load_table, stage_files
 
 # Shared per-nation monthly-revenue epoch split (cents) — the
 # q_fligner_policello / q_cucconi input: X = even-numbered years,
@@ -1078,46 +1082,29 @@ STREAM_DEDUP_WM_ORACLE = """
     tags=("streaming", "dedup", "watermark", "engine-surface"),
 )
 def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
+    def batch(values_sql):
+        # JVM-side SQL VALUES with timestamp literals: a Python-rows
+        # frame re-runs the Python runner on every write action (~5.5 s
+        # per tiny file, measured: 40 s of a 46 s query).
+        return spark.sql(
+            f"SELECT * FROM (VALUES {values_sql}) AS t(ts, k, pay)"
+        )
 
-    work = tempfile.mkdtemp(prefix="ksa_ddw_")
-    src, ckpt, out = f"{work}/src", f"{work}/ckpt", f"{work}/out"
-    os.makedirs(src)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # Batches are built JVM-SIDE (SQL VALUES with timestamp
-        # literals): a Python-rows DataFrame re-runs the Python runner
-        # on EVERY write action (~5.5s per tiny file, measured — 40s
-        # of a 46s query); the literal plan writes in ~0.2s. File
-        # order for maxFilesPerTrigger=1 is pinned with explicit
-        # mtimes instead of sleeps.
-        _seq = [0]
+    def ts(m):
+        return f"TIMESTAMP'2024-01-01 12:{m:02d}:00'"
 
-        def write_file(name, values_sql):
-            stage = f"{work}/stage_{name}"
-            spark.sql(
-                f"SELECT * FROM (VALUES {values_sql})"
-                " AS t(ts, k, pay)"
-            ).coalesce(1).write.mode("overwrite").parquet(stage)
-            part = glob.glob(stage + "/part-*.parquet")[0]
-            dst = os.path.join(src, name + ".parquet")
-            shutil.copy(part, dst)
-            _seq[0] += 1
-            base = 1700000000 + 10 * _seq[0]
-            os.utime(dst, (base, base))
-
-        def ts(m):
-            return f"TIMESTAMP'2024-01-01 12:{m:02d}:00'"
-
-        write_file("b1", f"({ts(0)}, 'x', 1L), ({ts(1)}, 'y', 2L)")
-        write_file("b2", f"({ts(2)}, 'x', 3L)")   # in-delay dup
-        write_file("b3", f"({ts(40)}, 'z', 4L)")  # raises event time
-        write_file("b4", f"({ts(41)}, 'w', 5L)")  # x/y still live
-        write_file("b5", f"({ts(42)}, 'y', 6L)")  # y evicted/readmit
+    with drain_workdir(spark) as work:
+        ckpt, out = f"{work}/ckpt", f"{work}/out"
+        src = stage_files(
+            work,
+            [
+                batch(f"({ts(0)}, 'x', 1L), ({ts(1)}, 'y', 2L)"),
+                batch(f"({ts(2)}, 'x', 3L)"),  # in-delay dup
+                batch(f"({ts(40)}, 'z', 4L)"),  # raises event time
+                batch(f"({ts(41)}, 'w', 5L)"),  # x/y still live
+                batch(f"({ts(42)}, 'y', 6L)"),  # y evicted/readmit
+            ],
+        )
         q = (
             spark.readStream.schema("ts TIMESTAMP, k STRING, pay LONG")
             .option("maxFilesPerTrigger", "1")
@@ -1131,7 +1118,7 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await_drained(q, 300)
         return (
             spark.read.parquet(out)
             .groupBy("k")
@@ -1143,9 +1130,6 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _minhash_calibration_oracle(
@@ -2203,33 +2187,19 @@ STREAM_TELEMETRY_ORACLE = """
     tags=("streaming", "telemetry", "engine-surface"),
 )
 def q_stream_telemetry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
+    def batch(values_sql):
+        return spark.sql(f"SELECT * FROM (VALUES {values_sql}) AS t(k, pay)")
 
-    work = tempfile.mkdtemp(prefix="ksa_tele_")
-    src, ckpt = f"{work}/src", f"{work}/ckpt"
-    os.makedirs(src)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        _seq = [0]
-
-        def write_file(name, values_sql):
-            stage = f"{work}/stage_{name}"
-            spark.sql(
-                f"SELECT * FROM (VALUES {values_sql}) AS t(k, pay)"
-            ).coalesce(1).write.mode("overwrite").parquet(stage)
-            dst = os.path.join(src, name + ".parquet")
-            shutil.copy(glob.glob(stage + "/part-*.parquet")[0], dst)
-            _seq[0] += 1
-            base = 1700000000 + 10 * _seq[0]
-            os.utime(dst, (base, base))
-
-        write_file("b1", "('a', 1L), ('b', 2L), ('a', 3L)")
-        write_file("b2", "('b', 4L)")
-        write_file("b3", "('c', 5L), ('d', 6L)")
+    with drain_workdir(spark) as work:
+        ckpt = f"{work}/ckpt"
+        src = stage_files(
+            work,
+            [
+                batch("('a', 1L), ('b', 2L), ('a', 3L)"),
+                batch("('b', 4L)"),
+                batch("('c', 5L), ('d', 6L)"),
+            ],
+        )
         q = (
             spark.readStream.schema("k STRING, pay LONG")
             .option("maxFilesPerTrigger", "1")
@@ -2242,7 +2212,7 @@ def q_stream_telemetry(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _await_drained(q, 120)
         rows = []
         for p in q.recentProgress:
             if p["numInputRows"] <= 0 or not p["stateOperators"]:
@@ -2261,9 +2231,6 @@ def q_stream_telemetry(spark: SparkSession, sf_dir: str) -> DataFrame:
             "batch_id bigint, num_input_rows bigint,"
             " rows_updated bigint, state_rows_total bigint",
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------

@@ -30,6 +30,10 @@ from pyspark.sql import functions as F
 from kafka_streams_aggregate_spark.operators import sketches as sk
 from kafka_streams_aggregate_spark.operators.inventory_fold import latest_per_key
 from kafka_streams_aggregate_spark.registry import register
+from kafka_streams_aggregate_spark.sources.eventlog_source import (
+    drain_workdir,
+    run_stream_committed,
+)
 from kafka_streams_aggregate_spark.sources.tables import (
     load_table,
     staged_two_batch,
@@ -1171,16 +1175,7 @@ def q_quantile_sketch_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sketch", "streaming", "stateful"),
 )
 def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
-
-    work = tempfile.mkdtemp(prefix="ksa_streamhll_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with drain_workdir(spark) as work:
         base = load_table(spark, "events", sf_dir).select(
             "user_id",
             "event_type",
@@ -1190,7 +1185,6 @@ def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, base, "ts_us", 1705363200000000,  # 2024-01-16 UTC
             "user_id long, event_type string, ts_us long", work,
         )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         regs_stream = (
             sk.hll_row_terms(raw, F.col("user_id"), F.col("event_type"))
             .groupBy("grp", "idx")
@@ -1213,9 +1207,6 @@ def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -1631,16 +1622,7 @@ _SQSK_NBINS = 1024  # events.value observed in [0, ~560]
     tags=("sketch", "percentile", "streaming", "stateful"),
 )
 def q_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from kafka_streams_aggregate_spark.sources.eventlog_source import (
-        run_stream_committed,
-    )
-
-    work = tempfile.mkdtemp(prefix="ksa_streamqsk_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with drain_workdir(spark) as work:
         base = load_table(spark, "events", sf_dir).select(
             "event_type",
             "value",
@@ -1650,7 +1632,6 @@ def q_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, base, "ts_us", 1705363200000000,  # 2024-01-16 UTC
             "event_type string, value double, ts_us long", work,
         )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         bin_col = F.least(
             F.floor(F.col("value") / F.lit(float(_SQSK_WIDTH))).cast(
                 "bigint"
@@ -1675,9 +1656,6 @@ def q_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             sk.hist_quantile_recover(final_bins, "event_type", _SQSK_WIDTH)
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------

@@ -22,6 +22,16 @@ objects.
 
 from __future__ import annotations
 
+import contextlib
+import shutil
+import tempfile
+
+# Every registered drain runs on a fresh checkpoint, where Spark fixes
+# the state-partition count from this conf. The drains' key counts
+# (~1.5k users at sf0.1) do not justify the session's 32-200 state
+# stores and Python workers per micro-batch.
+DRAIN_SHUFFLE_PARTITIONS = "8"
+
 
 def make_eventlog_source():
     """Build the EventLogDataSource class (name: ``eventlog``).
@@ -225,11 +235,17 @@ def register_eventlog_sink(spark) -> None:
     spark.dataSource.register(make_eventlog_sink())
 
 
-def read_eventlog_sink(spark, path: str):
+def read_eventlog_sink(spark, path: str, schema: str):
     """Read back ONLY committed output (manifest-listed files) as a
-    DataFrame of JSON lines — the consumer-side contract check."""
+    DataFrame of ``schema`` — the consumer-side contract check. The sink
+    serializes row values with ``str()``, so every column is read as a
+    string and then cast (string->timestamp/double casts are exact for
+    the ``str()`` formats)."""
     import glob
     import json
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType, StructField, StructType
 
     files = []
     for mf in sorted(glob.glob(f"{path}/manifest/*.json")):
@@ -238,8 +254,14 @@ def read_eventlog_sink(spark, path: str):
                 f"{path}/data/{e['file']}" for e in json.load(f)["files"]
             )
     if not files:
-        return spark.createDataFrame([], "dummy string")
-    return spark.read.json(files)
+        return spark.createDataFrame([], schema)
+    target = StructType.fromDDL(schema)
+    raw = spark.read.schema(
+        StructType([StructField(f.name, StringType()) for f in target])
+    ).json(files)
+    return raw.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target]
+    )
 
 
 def _await_drained(q, timeout: int) -> None:
@@ -302,13 +324,31 @@ def _read_committed(spark, out: str, schema: str, with_batch: bool):
     return df
 
 
+@contextlib.contextmanager
+def drain_workdir(spark):
+    """The scope of one registered drain: yields a fresh temp work dir
+    (source staging, checkpoint, sink output) with
+    ``spark.sql.shuffle.partitions`` pinned to
+    ``DRAIN_SHUFFLE_PARTITIONS``. On exit, by return or by exception,
+    the previous value is restored and the dir is removed, so a frame
+    returned from inside the scope must be ``localCheckpoint(eager=True)``
+    'd there: a lazy frame would re-read deleted files."""
+    work = tempfile.mkdtemp(prefix="ksa_drain_")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", DRAIN_SHUFFLE_PARTITIONS)
+        yield work
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def run_stream_committed(
     stream_df,
     work: str,
     output_mode: str,
     schema: str,
     timeout: int = 300,
-    append_via: str = "foreachbatch",
 ):
     """Drain a bounded (availableNow) streaming frame through the
     two-phase-commit manifest sink and return ONLY committed rows as a
@@ -317,22 +357,17 @@ def run_stream_committed(
     executor -> files -> manifest -> (distributed) read-back; the
     driver touches file names, never data.
 
-    ``append`` mode defaults to ``foreachBatch`` + a DISTRIBUTED JVM
+    Both modes sink through ``foreachBatch`` + a DISTRIBUTED JVM
     ``batch_df.write.json`` per micro-batch with an atomic per-batch
     manifest alongside (idempotent by batchId, Spark's own
-    FileCommitProtocol supplying task-level atomicity) — the same
-    sink ``update`` mode uses. r17-opt (guide §4):
-    this was previously the ``eventlogsink`` Python DataSource for all
-    ~40 streaming queries, which put a per-task Python writer round
-    trip in EVERY micro-batch; a fresh-JVM sink-isolation probe at
-    sf0.1 measured the tumbling-window drain at 3.6-4.6 s through the
-    Python sink vs 1.6-3.0 s through foreachBatch JVM json (~0.6
-    s/batch of pure Python-boundary cost), with identical committed
-    rows. ``append_via='datasource'`` keeps the Python-DataSource sink
-    path for the query whose DECLARED surface it is
-    (q_sink_exactly_once — the sink-side two-phase-commit engine
-    demo). Timestamps are written/read with an explicit microsecond
-    ``timestampFormat``: the JSON default truncates to millis.
+    FileCommitProtocol supplying task-level atomicity). The
+    ``eventlogsink`` Python DataSource would put a per-task Python
+    writer round trip in every micro-batch: a fresh-JVM sink-isolation
+    probe at sf0.1 measured the tumbling-window drain at 3.6-4.6 s
+    through it vs 1.6-3.0 s through foreachBatch JVM json, with
+    identical committed rows. Timestamps are written/read with an
+    explicit microsecond ``timestampFormat``: the JSON default
+    truncates to millis.
 
     ``update`` mode cannot use a Python stream sink at all (the Python
     stream-sink capability layer is append-only). Update-mode results
@@ -341,48 +376,14 @@ def run_stream_committed(
     manifest-listed batch directories (``_read_committed``), so neither
     the plan nor the file listing grows with the number of batches.
     """
-    import glob
     import json
     import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType, StructField, StructType
 
     if output_mode not in ("append", "update"):
         raise ValueError(f"unsupported output mode: {output_mode}")
     spark = stream_df.sparkSession
     out = f"{work}/sinkout"
     ckpt = f"{work}/sinkckpt"
-
-    if output_mode == "append" and append_via != "foreachbatch":
-        register_eventlog_sink(spark)
-        q = (
-            stream_df.writeStream.format("eventlogsink")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q, timeout)
-        files = []
-        for mf in sorted(glob.glob(f"{out}/manifest/*.json")):
-            with open(mf) as fh:
-                files.extend(
-                    f"{out}/data/{e['file']}" for e in json.load(fh)["files"]
-                )
-        if not files:
-            return spark.createDataFrame([], schema)
-        # The sink serializes row values with str(): read everything as
-        # strings, then cast to the declared schema (string->timestamp/
-        # double casts are exact for the str() formats).
-        target = StructType.fromDDL(schema)
-        raw = spark.read.schema(
-            StructType([StructField(f.name, StringType()) for f in target])
-        ).json(files)
-        return raw.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target]
-        )
 
     def _sink(batch_df, bid):
         # Distributed per-batch write + atomic manifest publish; a

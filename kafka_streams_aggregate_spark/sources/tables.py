@@ -84,6 +84,34 @@ def stream_events(
     return raw.select(*columns)
 
 
+def stage_files(work: str, batches: list[str | DataFrame]) -> str:
+    """Stage a file stream's input under a new ``{work}/src`` and return
+    that directory: one parquet file per entry of ``batches``, in list
+    order. An entry is either a parquet file path (copied as is, e.g.
+    ``f"{sf_dir}/events.parquet"``) or a DataFrame (written as one
+    coalesced file). Modification times are pinned 10 s apart in list
+    order, so a ``maxFilesPerTrigger=1`` stream reads entry i as
+    micro-batch i without sleeping between writes."""
+    import glob
+    import shutil
+    import time
+
+    src = f"{work}/src"
+    os.makedirs(src)
+    first = time.time() - 10 * len(batches)
+    for i, batch in enumerate(batches, 1):
+        dst = f"{src}/b{i}.parquet"
+        if isinstance(batch, str):
+            shutil.copy(batch, dst)
+        else:
+            tmp = f"{work}/stage_b{i}"
+            batch.coalesce(1).write.parquet(tmp)
+            [part] = glob.glob(f"{tmp}/part-*.parquet")
+            shutil.move(part, dst)
+        os.utime(dst, (first + 10 * i, first + 10 * i))
+    return src
+
+
 def staged_two_batch(
     spark: SparkSession,
     base: DataFrame,
@@ -93,27 +121,17 @@ def staged_two_batch(
     work: str,
 ) -> DataFrame:
     """Stream ``base`` as two micro-batches: the rows with ``split_col <
-    cutoff``, then the rest. Each part is written as one parquet file
-    under ``{work}/src`` with mtimes that order them, and the returned
-    ``readStream`` (``schema_ddl``) takes one file per trigger. Split on
-    event time, this gives every key its events in time order across
-    the batch boundary, the ingest order the stateful folds rely on."""
-    import glob
-    import shutil
-
-    src = f"{work}/src"
-    os.makedirs(src)
-    for name, pred in (
-        ("e1", F.col(split_col) < cutoff),
-        ("e2", F.col(split_col) >= cutoff),
-    ):
-        tmp = f"{work}/{name}_dir"
-        base.filter(pred).coalesce(1).write.parquet(tmp)
-        [part] = glob.glob(f"{tmp}/part-*.parquet")
-        shutil.move(part, f"{src}/{name}.parquet")
-    now = os.path.getmtime(f"{src}/e1.parquet")
-    os.utime(f"{src}/e1.parquet", (now - 100, now - 100))
-    os.utime(f"{src}/e2.parquet", (now + 100, now + 100))
+    cutoff``, then the rest (``stage_files``), through a ``readStream``
+    (``schema_ddl``) that takes one file per trigger. Split on event
+    time, this gives every key its events in time order across the
+    batch boundary, the ingest order the stateful folds rely on."""
+    src = stage_files(
+        work,
+        [
+            base.filter(F.col(split_col) < cutoff),
+            base.filter(F.col(split_col) >= cutoff),
+        ],
+    )
     return (
         spark.readStream.schema(schema_ddl)
         .option("maxFilesPerTrigger", "1")

@@ -62,15 +62,13 @@ def test_reflection_identity(ds):
 
 
 def test_cusum_stream_parity_sf0001(spark):
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from kafka_streams_aggregate_spark.operators.inventory_fold import (
         latest_per_key,
     )
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
+        drain_workdir,
         run_stream_committed,
     )
     from kafka_streams_aggregate_spark.sources.tables import (
@@ -82,9 +80,7 @@ def test_cusum_stream_parity_sf0001(spark):
         streaming_cusum,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_cusumstream_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with drain_workdir(spark) as work:
         base = load_table(spark, "events", SF).select(
             "event_id",
             "user_id",
@@ -95,7 +91,6 @@ def test_cusum_stream_parity_sf0001(spark):
             spark, base, "ts_us", 1705363200000000,  # 2024-01-16 UTC
             "event_id long, user_id long, ts_us long, value double", work,
         )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         committed = run_stream_committed(
             streaming_cusum(raw), work, "update", CUSUM_OUT_SCHEMA
         )
@@ -103,9 +98,6 @@ def test_cusum_stream_parity_sf0001(spark):
             committed, ["user_id"], "_batch",
             ["n_events", "cusum_last", "cusum_max", "n_alarms"],
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
     got = (
         got_df.toPandas().sort_values("user_id").reset_index(drop=True)

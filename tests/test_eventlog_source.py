@@ -139,7 +139,8 @@ def test_sink_manifest_commit_roundtrip(evsource, tmp_path):
     )
     q.awaitTermination(120)
 
-    back = read_eventlog_sink(spark, out)
+    schema = "event_id long, ts_us long, user_id long, event_type string, value double"
+    back = read_eventlog_sink(spark, out, schema)
     assert back.count() == TOTAL
     # Content fidelity on a sample key.
     row = back.filter("event_id = 7").collect()[0]
@@ -155,7 +156,7 @@ def test_sink_manifest_commit_roundtrip(evsource, tmp_path):
     # appear to manifest readers.
     with open(f"{out}/data/9-deadbeef.jsonl", "w") as f:
         f.write('{"event_id": 999999}\n')
-    assert read_eventlog_sink(spark, out).count() == TOTAL
+    assert read_eventlog_sink(spark, out, schema).count() == TOTAL
 
 def test_full_topology_source_topic_fold(evsource, tmp_path):
     """The reference application end-to-end, as the two-job chain a
@@ -204,11 +205,8 @@ def test_full_topology_source_topic_fold(evsource, tmp_path):
     )
     q.awaitTermination(180)
 
-    consumed = read_eventlog_sink(spark, out).select(
-        "product_code",
-        F.col("seq").cast("long").alias("seq"),
-        "action",
-        F.col("delta").cast("int").alias("delta"),
+    consumed = read_eventlog_sink(
+        spark, out, "product_code string, seq long, action string, delta int"
     )
     got = {
         r["product_code"]: int(r["count"])

@@ -90,12 +90,18 @@ def test_run_stream_committed_append_roundtrip(spark, tmp_path):
         assert "dir" in meta and "batch" in meta
 
 
-def test_run_stream_committed_append_datasource_path(spark, tmp_path):
-    # append_via='datasource' keeps the Python-DataSource sink surface
-    # (q_sink_exactly_once's declared demo): per-task .jsonl files, a
-    # per-batch manifest listing exactly the committed files, and
-    # committed rows identical to the default path.
+def test_eventlog_sink_matches_foreachbatch_append(spark, tmp_path):
+    # The eventlogsink Python DataSource (q_sink_exactly_once's declared
+    # surface), driven directly: per-task .jsonl files, a per-batch
+    # manifest listing exactly the committed files, and committed rows
+    # identical to run_stream_committed's foreachBatch append path.
+    import glob
+    import json
+
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
+        _await_drained,
+        read_eventlog_sink,
+        register_eventlog_sink,
         run_stream_committed,
     )
 
@@ -103,31 +109,35 @@ def test_run_stream_committed_append_datasource_path(spark, tmp_path):
     spark.range(100).selectExpr(
         "id", "CAST(id % 7 AS STRING) AS bucket"
     ).write.parquet(src)
+    schema = "id bigint, bucket string"
 
-    def drain(workdir, via):
-        stream = spark.readStream.schema(
-            "id long, bucket string"
-        ).parquet(src)
-        return run_stream_committed(
-            stream, workdir, "append", "id bigint, bucket string",
-            append_via=via,
-        )
+    def stream():
+        return spark.readStream.schema("id long, bucket string").parquet(src)
 
-    out_ds = drain(str(tmp_path / "wds"), "datasource")
-    out_fb = drain(str(tmp_path / "wfb"), "foreachbatch")
+    register_eventlog_sink(spark)
+    outdir = str(tmp_path / "wds" / "sinkout")
+    q = (
+        stream()
+        .writeStream.format("eventlogsink")
+        .option("path", outdir)
+        .option("checkpointLocation", str(tmp_path / "wds" / "sinkckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await_drained(q, 300)
+    out_ds = read_eventlog_sink(spark, outdir, schema)
+    out_fb = run_stream_committed(
+        stream(), str(tmp_path / "wfb"), "append", schema
+    )
     rows_ds = sorted((r["id"], r["bucket"]) for r in out_ds.collect())
     rows_fb = sorted((r["id"], r["bucket"]) for r in out_fb.collect())
     assert rows_ds == rows_fb and len(rows_ds) == 100
     # Only manifest-listed files count: every data file must be listed.
-    import glob
-    import json
-
-    outdir = str(tmp_path / "wds" / "sinkout")
     listed = set()
     for mf in glob.glob(f"{outdir}/manifest/*.json"):
         listed.update(e["file"] for e in json.load(open(mf))["files"])
     on_disk = {f.split("/")[-1] for f in glob.glob(f"{outdir}/data/*.jsonl")}
-    assert on_disk == listed
+    assert on_disk and on_disk == listed
 
 
 def test_run_stream_committed_append_timestamp_micros(spark, tmp_path):

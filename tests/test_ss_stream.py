@@ -18,15 +18,13 @@ CUT_DAY = 9300  # ~mid-1995: splits the shipdate range
 
 
 def test_ss_stream_parity_sf0001(spark):
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from kafka_streams_aggregate_spark.operators.inventory_fold import (
         latest_per_key,
     )
     from kafka_streams_aggregate_spark.sources.eventlog_source import (
+        drain_workdir,
         run_stream_committed,
     )
     from kafka_streams_aggregate_spark.sources.tables import (
@@ -38,9 +36,7 @@ def test_ss_stream_parity_sf0001(spark):
         streaming_ss_policy,
     )
 
-    work = tempfile.mkdtemp(prefix="ksa_ssstream_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with drain_workdir(spark) as work:
         daily = (
             load_table(spark, "lineitem", SF)
             .select(
@@ -59,7 +55,6 @@ def test_ss_stream_parity_sf0001(spark):
         raw = staged_two_batch(
             spark, daily, "d", CUT_DAY, "product long, d long, qty long", work
         )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         committed = run_stream_committed(
             streaming_ss_policy(raw), work, "update", SS_OUT_SCHEMA
         )
@@ -67,9 +62,6 @@ def test_ss_stream_parity_sf0001(spark):
             committed, ["product"], "_batch",
             ["n_days", "lost_sales", "n_orders", "end_on_hand"],
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(work, ignore_errors=True)
 
     got = got_df.toPandas().sort_values("product").reset_index(drop=True)
     con = duckdb.connect()
